@@ -39,6 +39,36 @@ def test_staged_extraction_has_no_shuffle_between_python_stages(spark, pages_smo
     assert count_exchanges(t) <= 1
 
 
+def test_run_pipeline_builds_each_graph_table_in_one_python_pass(
+    spark, pages_smoke
+):
+    from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline
+
+    stages = run_pipeline(spark, pages_smoke, PipelineConfig())
+    # the default path extracts html -> triples in one mapInPandas, and the
+    # nodes projection reads the triples once, so neither table re-plans
+    # the Python extraction per stage or per union branch
+    assert python_eval_count(stages["edges"]) == 1
+    assert python_eval_count(stages["nodes"]) == 1
+
+
+def test_canonical_nodes_scan_the_triples_once(spark, tmp_path):
+    from text_to_graph_spark.operators.canonicalize import (
+        triples_to_canonical_nodes,
+    )
+
+    path = str(tmp_path / "triples")
+    spark.createDataFrame(
+        [("u", 0, 0, "Acme", "owns", "Beta")],
+        "url string, chunk_index int, pos int, subj string, pred string,"
+        " obj string",
+    ).write.parquet(path)
+    nodes = triples_to_canonical_nodes(spark.read.parquet(path))
+    plan = plan_str(nodes, "simple")
+    assert plan.count("FileScan") == 1
+    assert "Union" not in plan
+
+
 def test_filter_pushdown_and_column_pruning(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     q = docs.where(F.col("lang") == "en").select("doc_id", "lang")

@@ -11,6 +11,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tests import oracle as O
@@ -189,20 +190,62 @@ def test_fused_path_agrees_with_staged_path(spark, pages_smoke):
     assert len(fused) == len(staged)
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_fused_path_agrees_with_staged_path_pretoken_counter(spark, pages_smoke):
+    # multi-paragraph pages with punctuation: the pretoken counter packs
+    # them into other chunks than the whitespace counter does, so equality
+    # with the staged chain shows the fused path honours the counter
+    from text_to_graph_spark.kit.htmlcodec import wrap_text_as_html
+    from text_to_graph_spark.operators.extraction import extract_triples_from_pages
+
+    texts = [r["text"] for r in pages_smoke.orderBy("url").limit(100).collect()]
+    pages = spark.createDataFrame(
+        [
+            (
+                f"https://example.test/multi/{i}",
+                wrap_text_as_html(
+                    "\n\n".join(t + " (e.g., ibid.)" for t in texts[i : i + 5])
+                ),
+            )
+            for i in range(0, len(texts), 5)
+        ],
+        "url string, html binary",
+    )
+    def fused(counter):
+        return _rows(
+            extract_triples_from_pages(pages, "vocab", 100, token_counter=counter)
+        )
+
+    staged = extract_triples(
+        chunk_pages(extract_text(pages), 100, token_counter="pretoken"), "vocab"
+    )
+    assert fused("pretoken") == _rows(staged)
+    assert fused("pretoken") != fused("whitespace")
+
+
 def test_pipeline_fused_impl_and_dedup(spark, pages_smoke):
-    from pyspark.sql import functions as F
+    from text_to_graph_spark.operators.canonicalize import (
+        triples_to_canonical_edges,
+        triples_to_canonical_nodes,
+    )
+    from text_to_graph_spark.pipeline import (
+        dedup_pages_by_content,
+        vocab_category_table,
+    )
 
-    from text_to_graph_spark.pipeline import dedup_pages_by_content
-
-    fused = run_pipeline(spark, pages_smoke, PipelineConfig(impl="fused"))
-    staged = run_pipeline(spark, pages_smoke, PipelineConfig())
-    key = lambda df: {
-        (r["subj_key"], r["pred_key"], r["obj_key"], r["n_occurrences"])
-        for r in df.select(
-            "subj_key", "pred_key", "obj_key", "n_occurrences"
-        ).collect()
-    }
-    assert key(fused["edges"]) == key(staged["edges"])
+    # the default (fused) graph tables == the same tables built from the
+    # staged operator chain, every column
+    fused = run_pipeline(spark, pages_smoke, PipelineConfig())
+    staged = extract_triples(chunk_pages(extract_text(pages_smoke)), "vocab")
+    assert _rows(fused["edges"]) == _rows(triples_to_canonical_edges(staged))
+    assert _rows(fused["nodes"]) == _rows(
+        triples_to_canonical_nodes(staged, category_of=vocab_category_table(spark))
+    )
+    with pytest.raises(ValueError):
+        PipelineConfig(impl="fused")
 
     # content dedup: duplicate html collapses to the min-url representative
     dup = pages_smoke.limit(3)

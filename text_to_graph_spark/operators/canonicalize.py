@@ -291,23 +291,25 @@ def triples_to_canonical_nodes(
     """
     if provenance not in ("doc_ids", "counts"):
         raise ValueError(f"provenance must be doc_ids|counts, got {provenance!r}")
-    subj = triples.select(
+    # one occurrence row per (triple, role) from ONE read of the triples; a
+    # subj/obj union re-plans the triples lineage (the Python extraction,
+    # when not materialized) once per branch
+    occ = triples.select(
         "url",
         "chunk_index",
         "pos",
-        F.lit(0).alias("role"),
-        sanitize_col("subj").alias("label_s"),
+        F.inline(
+            F.array(
+                F.struct(
+                    F.lit(0).alias("role"), sanitize_col("subj").alias("label_s")
+                ),
+                F.struct(
+                    F.lit(1).alias("role"), sanitize_col("obj").alias("label_s")
+                ),
+            )
+        ),
     )
-    obj = triples.select(
-        "url",
-        "chunk_index",
-        "pos",
-        F.lit(1).alias("role"),
-        sanitize_col("obj").alias("label_s"),
-    )
-    occ = subj.unionByName(obj).withColumn("key", F.lower("label_s")).where(
-        F.col("key") != ""
-    )
+    occ = occ.withColumn("key", F.lower("label_s")).where(F.col("key") != "")
     ordv = first_occurrence_ord(role="role")
     if provenance == "counts":
         # Same split + two-pass HashAggregate argmin as

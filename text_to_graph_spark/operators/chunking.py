@@ -8,8 +8,8 @@ document, the operator is a pure row-wise flatMap: ``mapInPandas``, ZERO
 shuffle (an earlier ``groupBy(url).applyInPandas`` shape paid a full
 exchange of the corpus for nothing — at 100 TB that shuffle would dominate
 the whole pipeline). Giant documents remain the skew risk within a task:
-callers cap document length upstream and record truncation in the metrics
-rows.
+nothing caps document length yet, so one giant page is packed whole by a
+single task and no truncation is recorded.
 
 ``with_neighbor_context``: the reference's L0 overlap / L2 padding assembly
 (``graph_generator.py:250-275`` and ``:194-199``) as a ``lag``/``lead``
@@ -21,13 +21,14 @@ leading fraction of the next (fraction slicing by whitespace tokens, matching
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from text_to_graph_spark.kit.chunker import pack_units
+from text_to_graph_spark.kit.tokenize import count_tokens
 
 # Deliberate divergence from the reference chunk schema
 # (``chunk_utils.py:127-133``): ``doc_page`` is omitted. It is the PDF page
@@ -43,6 +44,28 @@ CHUNK_SCHEMA = (
 
 
 _CHUNK_COLS = ["url", "chunk_index", "chunk_size", "token_start", "token_end", "text"]
+
+
+def resolve_token_counter(
+    token_counter: str,
+    bpe_merges: list[tuple[bytes, bytes]] | None = None,
+) -> Callable[[str], int]:
+    """The C5 token counter named by ``token_counter`` — the one resolver
+    behind both packing paths (:func:`chunk_pages` and the fused
+    ``extraction.extract_triples_from_pages``)."""
+    if token_counter == "whitespace":
+        return count_tokens
+    if token_counter == "pretoken":
+        from text_to_graph_spark.kit.bpe import count_pretokens
+
+        return count_pretokens
+    if token_counter == "bpe":
+        from text_to_graph_spark.kit.bpe import BPE
+
+        if bpe_merges is None:
+            raise ValueError("token_counter='bpe' requires bpe_merges")
+        return BPE(bpe_merges).count
+    raise ValueError(f"unknown token_counter: {token_counter!r}")
 
 
 def chunk_pages(
@@ -67,32 +90,13 @@ def chunk_pages(
       once on a sample and broadcast, never per-task.
     """
     cols = extracted.select("url", "text")
-
-    if token_counter == "whitespace":
-        counter = None  # pack_units default
-    elif token_counter == "pretoken":
-        from text_to_graph_spark.kit.bpe import count_pretokens
-
-        counter = count_pretokens
-    elif token_counter == "bpe":
-        from text_to_graph_spark.kit.bpe import BPE
-
-        if bpe_merges is None:
-            raise ValueError("token_counter='bpe' requires bpe_merges")
-        counter = BPE(bpe_merges).count
-    else:
-        raise ValueError(f"unknown token_counter: {token_counter!r}")
+    counter = resolve_token_counter(token_counter, bpe_merges)
 
     def _pack_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out: list[dict] = []
             for url, text in zip(pdf["url"], pdf["text"]):
-                rows = (
-                    pack_units(text, chunk_size)
-                    if counter is None
-                    else pack_units(text, chunk_size, counter)
-                )
-                for row in rows:
+                for row in pack_units(text, chunk_size, counter):
                     row["url"] = url
                     out.append(row)
             yield pd.DataFrame(out, columns=_CHUNK_COLS)

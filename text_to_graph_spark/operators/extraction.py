@@ -29,8 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from text_to_graph_spark.kit.chunker import pack_units
 from text_to_graph_spark.kit.extract import get_model
 from text_to_graph_spark.kit.htmlcodec import extract_text_from_html
+from text_to_graph_spark.operators.chunking import resolve_token_counter
 
 _TEXT_SCHEMA = "url string, text string"
 
@@ -133,21 +135,24 @@ def restrict_triples_to_mentions(
 
 
 def extract_triples_from_pages(
-    pages: DataFrame, model_name: str = "vocab", chunk_size: int = 1000
+    pages: DataFrame,
+    model_name: str = "vocab",
+    chunk_size: int = 1000,
+    token_counter: str = "whitespace",
 ) -> DataFrame:
     """Fused html -> text -> chunks -> triples in ONE ``mapInPandas``.
 
     Semantically identical to
-    ``extract_triples(chunk_pages(extract_text(pages)))`` (tests assert
-    equality) but crosses the JVM<->Python Arrow boundary once instead of
-    three times and runs one Python worker per task instead of three. At
-    corpus scale the intermediate text/chunk columns are the full corpus —
-    not shipping them through Arrow twice is the single biggest constant-
-    factor win in the pipeline; use the staged operators when the
-    intermediate tables must be checkpointed/inspected.
+    ``extract_triples(chunk_pages(extract_text(pages), chunk_size,
+    token_counter))`` (tests assert equality) but crosses the JVM<->Python
+    Arrow boundary once instead of three times and runs one Python worker
+    per task instead of three. At corpus scale the intermediate text/chunk
+    columns are the full corpus — not shipping them through Arrow twice is
+    the single biggest constant-factor win in the pipeline; use the staged
+    operators when the intermediate tables must be checkpointed or the
+    chunk rows feed a window (neighbor-context overlap).
     """
-    from text_to_graph_spark.kit.chunker import pack_units
-
+    counter = resolve_token_counter(token_counter)
     cols = pages.select("url", "html")
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -157,7 +162,7 @@ def extract_triples_from_pages(
             cidx: list = []
             ctexts: list = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                for row in pack_units(extract_text_from_html(html), chunk_size):
+                for row in pack_units(extract_text_from_html(html), chunk_size, counter):
                     urls.append(url)
                     cidx.append(row["chunk_index"])
                     ctexts.append(row["text"])

@@ -1,14 +1,22 @@
 """End-to-end KG construction pipeline: pages -> canonical nodes/edges.
 
-The stage DAG (SURVEY.md §7.1), each stage a DataFrame transformation; at
-scale each stage boundary is an Iceberg checkpoint table (sandbox: parquet —
-see ``sources/checkpoint.py``):
+The stage DAG (SURVEY.md §7.1):
 
     pages (url, warc_ts, html, text, lang)
-      -> extracted (url, text)            mapInPandas, byte-identical
-      -> chunks (url, chunk_index, ...)   applyInPandas greedy packer
-      -> triples (url, chunk_index, pos, subj, pred, obj)   mapInPandas model
+      -> extracted (url, text)            html -> text, byte-identical
+      -> chunks (url, chunk_index, ...)   greedy token-budget packer
+      -> triples (url, chunk_index, pos, subj, pred, obj)   batched model
       -> canonical edges + nodes          groupBy/min_by/collect_set
+
+``run_pipeline`` extracts triples on the fused path
+(``extract_triples_from_pages``: html -> text -> chunks -> triples in one
+``mapInPandas``), so each graph table costs one Python pass over the pages;
+its ``extracted``/``chunks``/``mentions`` are lazy staged DataFrames that
+run only if acted on. The staged chain builds the triples only where stage
+rows are needed: ``overlap > 0`` (the neighbor-context window reads chunk
+rows), ``impl="sql"``, and ``run_pipeline_checkpointed`` (each stage
+boundary is a resumable checkpoint table; local runs use parquet — see
+``sources/checkpoint.py``).
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from text_to_graph_spark.operators.extraction import (
     extract_mentions,
     extract_text,
     extract_triples,
+    extract_triples_from_pages,
 )
 
 
@@ -39,8 +48,9 @@ class PipelineConfig:
     model: str = "vocab"
     chunk_size: int = 1000
     overlap: int = 0
-    # extraction impl: "pandas" (staged contract path) | "sql" (pure
-    # Catalyst) | "fused" (single mapInPandas, fastest — no stage tables)
+    # triple extraction: "pandas" (batched model in mapInPandas; fused with
+    # html -> text -> chunks unless overlap > 0 or checkpointed) | "sql"
+    # (vocab model as pure Catalyst over staged chunk text)
     impl: str = "pandas"
     lang_filter: str | None = None
     # content-hash pre-dedup (the reference never re-extracts identical
@@ -51,6 +61,10 @@ class PipelineConfig:
     # "pretoken" (BPE pre-tokenizer regex pieces), or "bpe" (trained
     # merges; pass merges to chunk_pages directly for that path)
     token_counter: str = "whitespace"
+
+    def __post_init__(self) -> None:
+        if self.impl not in ("pandas", "sql"):
+            raise ValueError(f"impl must be pandas|sql, got {self.impl!r}")
 
     def config_id(self) -> str:
         import hashlib
@@ -102,10 +116,7 @@ def run_pipeline_checkpointed(
     )
     triples = ck.resume(
         chunks, "triples", cid, ["url"],
-        # fused has no stage tables; under checkpointing it runs staged pandas
-        lambda missing: extract_triples(
-            missing, cfg.model, impl="sql" if cfg.impl == "sql" else "pandas"
-        ),
+        lambda missing: extract_triples(missing, cfg.model, impl=cfg.impl),
     )
     # canonicalization is a global aggregate — rewritten wholesale per run
     # (cheap relative to extraction; keyed resume does not apply to a
@@ -149,18 +160,6 @@ def run_pipeline(
         pages = pages.where(F.col("lang") == cfg.lang_filter)
     if cfg.dedup_pages:
         pages = dedup_pages_by_content(pages)
-    if cfg.impl == "fused":
-        from text_to_graph_spark.operators.extraction import (
-            extract_triples_from_pages,
-        )
-
-        triples = extract_triples_from_pages(
-            pages, cfg.model, chunk_size=cfg.chunk_size
-        )
-        edges = triples_to_canonical_edges(triples)
-        cats = vocab_category_table(spark) if cfg.model == "vocab" else None
-        nodes = triples_to_canonical_nodes(triples, category_of=cats)
-        return {"pages": pages, "triples": triples, "edges": edges, "nodes": nodes}
     extracted = extract_text(pages)
     chunks = chunk_pages(
         extracted, chunk_size=cfg.chunk_size, token_counter=cfg.token_counter
@@ -174,8 +173,13 @@ def run_pipeline(
         )
     else:
         chunk_input = chunks.select("url", "chunk_index", "text")
+    if cfg.overlap > 0 or cfg.impl == "sql":
+        triples = extract_triples(chunk_input, cfg.model, impl=cfg.impl)
+    else:
+        triples = extract_triples_from_pages(
+            pages, cfg.model, cfg.chunk_size, cfg.token_counter
+        )
     mentions = extract_mentions(chunk_input, cfg.model)
-    triples = extract_triples(chunk_input, cfg.model, impl=cfg.impl)
     edges = triples_to_canonical_edges(triples)
     cats = vocab_category_table(spark) if cfg.model == "vocab" else None
     nodes = triples_to_canonical_nodes(triples, category_of=cats)

@@ -1,6 +1,7 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults chosen for the 100 TB target (and safe at local[32]):
+Defaults chosen for the 100 TB target; the default local master uses
+``SPARK_GRAFT_CPUS`` or else every core of the host:
 - AQE on (runtime partition coalescing + skew-join splitting),
 - Arrow on for every pandas-UDF boundary,
 - explicit shuffle partition count (overridable; AQE coalesces down),
@@ -10,9 +11,14 @@ Defaults chosen for the 100 TB target (and safe at local[32]):
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -22,7 +28,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -67,8 +73,10 @@ def _warmup_collation(spark: SparkSession) -> None:
         spark.range(1).select(
             F.lower(F.concat(F.lit("Warm"), F.col("id").cast("string")))
         ).collect()
-    except Exception:
-        pass  # warm-up is best-effort; never fail session creation
+    except (PySparkException, Py4JError) as e:
+        # best-effort: a failed warm-up only means the first real lower()
+        # pays the class init, so it must not fail session creation
+        log.warning("collation warm-up failed: %s", e)
 
 
 def ensure_min_partitions(df, min_partitions: int | None = None):
@@ -105,7 +113,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     ]:
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a running session — keep going
+        except PySparkException as e:
+            # static conf on a running session: keep the caller's value
+            log.warning("cannot set %s=%s on this session: %s", k, v, e)
     _warmup_collation(spark)
     return spark
