@@ -1,7 +1,8 @@
 """Benchmark harness — one JSON line on stdout.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default ``SF_DIR``
+below) on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count, as
+``get_spark``) and prints
 
     {"metric": "e2e_bench_wall", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": ..., "triples_per_sec": ...,
@@ -24,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 ONLY = {q for q in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if q}
 # best-of-N per query: the sandbox VM has noisy-neighbor interference with
 # 3-10x swings on identical runs (observed: the same kg_pipeline 39.6s and

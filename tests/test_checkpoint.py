@@ -4,6 +4,10 @@ recomputes only missing keys; lineage metrics rows are recorded."""
 
 from __future__ import annotations
 
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from text_to_graph_spark.sources.checkpoint import StageCheckpoint
@@ -60,6 +64,36 @@ def test_metrics_lineage_rows(spark, tmp_path):
     }
     bystage = m[m["stage"] == "stage_m"]
     assert bystage["rows_out"].sum() == 100
+
+
+def test_resume_lineage_reports_several_stages_from_one_table(spark, tmp_path):
+    cp = StageCheckpoint(spark, str(tmp_path))
+    cp.resume(
+        _keys(spark, 10), "s", "c", ["k"],
+        lambda keys: keys.withColumn("n", F.col("k") % 3),
+        lineage={"rows": F.lit(1), "n": F.col("n")},
+    )
+    m = cp.metrics().groupBy("stage").agg(F.sum("rows_out").alias("total"))
+    assert {r["stage"]: r["total"] for r in m.collect()} == {
+        "rows": 10, "n": sum(k % 3 for k in range(10)),
+    }
+
+
+def test_derived_table_rebuilt_only_when_source_changes(spark, tmp_path):
+    cp = StageCheckpoint(spark, str(tmp_path))
+
+    def derive():
+        return cp.read("s", "c").groupBy().count()
+
+    cp.resume(_keys(spark, 3), "s", "c", ["k"], lambda keys: keys)
+    assert cp.write(derive(), "agg", "c", source="s").first()[0] == 3
+    # source unchanged: the derived table is reused, no lineage row added
+    n_metrics = cp.metrics().count()
+    assert cp.write(derive(), "agg", "c", source="s").first()[0] == 3
+    assert cp.metrics().count() == n_metrics
+    # an append changes the source version: the derived table is rebuilt
+    cp.resume(_keys(spark, 5), "s", "c", ["k"], lambda keys: keys)
+    assert cp.write(derive(), "agg", "c", source="s").first()[0] == 5
 
 
 def test_different_config_recomputes(spark, tmp_path):
@@ -127,3 +161,102 @@ def test_run_pipeline_checkpointed_resume_and_salted_parity(spark, pages_smoke, 
         .count()
     )
     assert docs_eq == 0
+
+
+def _stage_files(wd, stage):
+    root = os.path.join(wd, stage)
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+def _all_rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_checkpointed_rerun_extracts_nothing_and_appends_nothing(
+    spark, pages_smoke, tmp_path, monkeypatch
+):
+    from text_to_graph_spark import pipeline
+    from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline_checkpointed
+
+    wd = str(tmp_path / "stages")
+    first = run_pipeline_checkpointed(spark, pages_smoke, wd, PipelineConfig())
+    # the fixture has pages without any triple: they must count as done too
+    with_triples = first["triples"].select("url").distinct().count()
+    assert with_triples < pages_smoke.count()
+    edges1, nodes1 = _all_rows(first["edges"]), _all_rows(first["nodes"])
+    files1 = _stage_files(wd, "triples")
+    n_metrics = first["checkpoint"].metrics().count()
+
+    calls = []
+    fused = pipeline.extract_page_results
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return fused(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "extract_page_results", counted)
+    second = run_pipeline_checkpointed(spark, pages_smoke, wd, PipelineConfig())
+    assert calls == []
+    assert _stage_files(wd, "triples") == files1
+    assert second["checkpoint"].metrics().count() == n_metrics
+    assert _all_rows(second["edges"]) == edges1
+    assert _all_rows(second["nodes"]) == nodes1
+
+
+def test_checkpointed_resume_appends_only_new_pages(spark, pages_smoke, tmp_path):
+    from text_to_graph_spark.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+        run_pipeline_checkpointed,
+    )
+
+    wd = str(tmp_path / "stages")
+    half = pages_smoke.where(F.crc32("url") % 2 == 0)
+    run_pipeline_checkpointed(spark, half, wd, PipelineConfig())
+    full = run_pipeline_checkpointed(spark, pages_smoke, wd, PipelineConfig())
+    # each page processed exactly once across the two runs
+    results = full["checkpoint"].read("triples", PipelineConfig().config_id())
+    assert results.count() == results.select("url").distinct().count()
+    assert results.count() == pages_smoke.count()
+    # the rebuilt graph tables equal a clean build's, every column
+    clean = run_pipeline(spark, pages_smoke, PipelineConfig())
+    assert _all_rows(full["edges"]) == _all_rows(clean["edges"])
+    assert _all_rows(full["nodes"]) == _all_rows(clean["nodes"])
+
+
+def test_checkpointed_rejects_configs_it_cannot_apply(spark, pages_smoke, tmp_path):
+    from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline_checkpointed
+
+    for cfg in (PipelineConfig(overlap=100), PipelineConfig(impl="sql")):
+        with pytest.raises(ValueError):
+            run_pipeline_checkpointed(spark, pages_smoke, str(tmp_path / "wd"), cfg)
+
+
+def test_cli_rerun_prints_the_same_graph(spark, tmp_path, capsys):
+    from tests.conftest import SF_SMOKE
+    from text_to_graph_spark.__main__ import main
+
+    wd = str(tmp_path / "run")
+    argv = ["--sf-dir", SF_SMOKE, "--workdir", wd]
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        outs, n_metrics = [], []
+        for _ in range(2):
+            assert main(argv) == 0
+            outs.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
+            n_metrics.append(StageCheckpoint(spark, wd).metrics().count())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    assert outs[0]["n_edges"] > 0 and outs[0]["n_nodes"] > 0
+    assert [(o["n_nodes"], o["n_edges"]) for o in outs] == [
+        (outs[0]["n_nodes"], outs[0]["n_edges"])
+    ] * 2
+    # the rerun materialized nothing, so it recorded no lineage rows
+    assert n_metrics[1] == n_metrics[0]
+    # the checkpointed path has one extractor, so the CLI has no --impl
+    with pytest.raises(SystemExit):
+        main(argv + ["--impl", "pandas"])

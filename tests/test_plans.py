@@ -6,6 +6,8 @@ pin the plan shapes the design depends on."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -50,6 +52,30 @@ def test_run_pipeline_builds_each_graph_table_in_one_python_pass(
     # the Python extraction per stage or per union branch
     assert python_eval_count(stages["edges"]) == 1
     assert python_eval_count(stages["nodes"]) == 1
+
+
+def test_checkpointed_build_writes_one_python_pass(
+    spark, pages_smoke, tmp_path, monkeypatch
+):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline_checkpointed
+
+    wd = str(tmp_path / "stages")
+    writes = {}
+    parquet = DataFrameWriter.parquet
+
+    def recorded(self, path, *args, **kwargs):
+        stage = os.path.relpath(path, wd).split(os.sep)[0]
+        if stage != "_metrics":
+            writes[stage] = python_eval_count(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recorded)
+    run_pipeline_checkpointed(spark, pages_smoke, wd, PipelineConfig())
+    # a fresh checkpointed build extracts in one Python pass, written once
+    # to the per-page results stage; edges and nodes read that table back
+    assert writes == {"triples": 1, "edges": 0, "nodes": 0}
 
 
 def test_canonical_nodes_scan_the_triples_once(spark, tmp_path):

@@ -2,15 +2,18 @@
 
 Local sandbox:
     python -m text_to_graph_spark --sf-dir /root/testdata/sf0.001 \
-        --workdir /tmp/kg_run --impl pandas
+        --workdir /tmp/kg_run
 
 Cluster (the north-rule shape):
     zip -r t2g.zip text_to_graph_spark
     spark-submit --py-files t2g.zip --master yarn \
         t2g_job.py --pages-table iceberg_catalog.db.pages --workdir s3://…
 
-Runs the checkpointed stage DAG (resume-safe; lineage metrics appended per
-materialization) and prints one JSON summary line.
+Runs the checkpointed pipeline: one fused extraction pass into a per-page
+results stage table (resume-safe: a rerun extracts only urls it has not
+processed, and rebuilds the canonical edges/nodes only when that table
+changed), with per-partition lineage rows for the extracted, chunks,
+triples, edges and nodes stages. Prints one JSON summary line.
 """
 
 from __future__ import annotations
@@ -27,7 +30,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--master", default=None)
     ap.add_argument("--model", default="vocab", choices=["vocab", "prose"])
-    ap.add_argument("--impl", default="pandas", choices=["pandas", "sql"])
     ap.add_argument("--chunk-size", type=int, default=1000)
     ap.add_argument("--lang", default=None)
     ap.add_argument("--dedup-pages", action="store_true")
@@ -56,7 +58,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = PipelineConfig(
         model=args.model,
         chunk_size=args.chunk_size,
-        impl=args.impl,
         lang_filter=args.lang,
         dedup_pages=args.dedup_pages,
         token_counter=args.token_counter,

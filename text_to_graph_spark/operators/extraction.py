@@ -25,7 +25,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -134,23 +136,30 @@ def restrict_triples_to_mentions(
     ).drop("mentions")
 
 
-def extract_triples_from_pages(
+_PAGE_RESULT_SCHEMA = (
+    "url string, n_chunks int, triples array<struct<chunk_index: int,"
+    " pos: int, subj: string, pred: string, obj: string>>"
+)
+
+
+def extract_page_results(
     pages: DataFrame,
     model_name: str = "vocab",
     chunk_size: int = 1000,
     token_counter: str = "whitespace",
 ) -> DataFrame:
-    """Fused html -> text -> chunks -> triples in ONE ``mapInPandas``.
+    """Fused html -> text -> chunks -> triples in ONE ``mapInPandas``, one
+    output row per input page: ``(url, n_chunks, triples)``.
 
-    Semantically identical to
-    ``extract_triples(chunk_pages(extract_text(pages), chunk_size,
-    token_counter))`` (tests assert equality) but crosses the JVM<->Python
-    Arrow boundary once instead of three times and runs one Python worker
-    per task instead of three. At corpus scale the intermediate text/chunk
-    columns are the full corpus — not shipping them through Arrow twice is
-    the single biggest constant-factor win in the pipeline; use the staged
-    operators when the intermediate tables must be checkpointed or the
-    chunk rows feed a window (neighbor-context overlap).
+    A page with no triples (or null/undecodable html, which has no chunks)
+    is still a row with an empty ``triples`` list, so the set of urls in the
+    output is the set of urls processed — the key set a resumable stage
+    table needs. ``page_triples`` flattens it to the staged chain's triple
+    rows: ``page_triples(extract_page_results(pages))`` equals
+    ``extract_triples(chunk_pages(extract_text(pages)))`` (tests assert it),
+    but crosses the JVM<->Python Arrow boundary once instead of three times.
+    Each batch's ``triples`` column is one Arrow ``ListArray``: the batch's
+    triple columns cut by per-page offsets.
     """
     counter = resolve_token_counter(token_counter)
     cols = pages.select("url", "html")
@@ -158,27 +167,70 @@ def extract_triples_from_pages(
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = get_model(model_name)
         for pdf in it:
-            urls: list = []
+            n_chunks = np.zeros(len(pdf), dtype=np.int32)
+            owner: list = []
             cidx: list = []
             ctexts: list = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for row in pack_units(extract_text_from_html(html), chunk_size, counter):
-                    urls.append(url)
+            for i, html in enumerate(pdf["html"]):
+                rows = pack_units(extract_text_from_html(html), chunk_size, counter)
+                n_chunks[i] = len(rows)
+                for row in rows:
+                    owner.append(i)
                     cidx.append(row["chunk_index"])
                     ctexts.append(row["text"])
-            cdf = pd.DataFrame(
-                {"url": urls, "chunk_index": cidx, "text": ctexts}
+            t = model.triples(pd.Series(ctexts, dtype=object))
+            chunk = t["row"].to_numpy(dtype=np.int64)
+            pos = t["pos"].to_numpy(dtype=np.int32)
+            # chunk rows are page-major, so (chunk row, pos) order groups
+            # each page's triples contiguously
+            order = np.lexsort((pos, chunk))
+            chunk = chunk[order]
+            page = np.asarray(owner, dtype=np.int64)[chunk]
+            offsets = np.zeros(len(pdf) + 1, dtype=np.int32)
+            np.cumsum(np.bincount(page, minlength=len(pdf)), out=offsets[1:])
+            fields = [
+                pa.array(np.asarray(cidx, dtype=np.int32)[chunk]),
+                pa.array(pos[order]),
+                *(
+                    pa.array(t[c].to_numpy(dtype=object)[order], pa.string())
+                    for c in ("subj", "pred", "obj")
+                ),
+            ]
+            triples = pa.ListArray.from_arrays(
+                pa.array(offsets),
+                pa.StructArray.from_arrays(
+                    fields, names=["chunk_index", "pos", "subj", "pred", "obj"]
+                ),
             )
-            t = model.triples(cdf["text"])
-            if t.empty:
-                yield pd.DataFrame(
-                    columns=["url", "chunk_index", "pos", "subj", "pred", "obj"]
-                ).astype({"chunk_index": "int32", "pos": "int32"})
-                continue
-            t = t.join(cdf[["url", "chunk_index"]], on="row")
-            yield t[["url", "chunk_index", "pos", "subj", "pred", "obj"]]
+            yield pd.DataFrame(
+                {
+                    "url": pdf["url"],
+                    "n_chunks": n_chunks,
+                    "triples": pd.arrays.ArrowExtensionArray(triples),
+                }
+            )
 
-    return cols.mapInPandas(_batches, schema=_TRIPLE_SCHEMA)
+    return cols.mapInPandas(_batches, schema=_PAGE_RESULT_SCHEMA)
+
+
+def page_triples(results: DataFrame) -> DataFrame:
+    """Per-page results -> triple rows (url, chunk_index, pos, subj, pred,
+    obj): one ``inline`` projection, no shuffle."""
+    return results.select("url", F.inline("triples"))
+
+
+def extract_triples_from_pages(
+    pages: DataFrame,
+    model_name: str = "vocab",
+    chunk_size: int = 1000,
+    token_counter: str = "whitespace",
+) -> DataFrame:
+    """Fused html -> text -> chunks -> triple rows: ``page_triples`` over
+    ``extract_page_results`` (one ``mapInPandas``). Use the staged operators
+    when the chunk rows feed a window (neighbor-context overlap)."""
+    return page_triples(
+        extract_page_results(pages, model_name, chunk_size, token_counter)
+    )
 
 
 def _vocab_triples_sql(chunks: DataFrame) -> DataFrame:

@@ -8,15 +8,20 @@ The stage DAG (SURVEY.md §7.1):
       -> triples (url, chunk_index, pos, subj, pred, obj)   batched model
       -> canonical edges + nodes          groupBy/min_by/collect_set
 
-``run_pipeline`` extracts triples on the fused path
-(``extract_triples_from_pages``: html -> text -> chunks -> triples in one
-``mapInPandas``), so each graph table costs one Python pass over the pages;
-its ``extracted``/``chunks``/``mentions`` are lazy staged DataFrames that
-run only if acted on. The staged chain builds the triples only where stage
-rows are needed: ``overlap > 0`` (the neighbor-context window reads chunk
-rows), ``impl="sql"``, and ``run_pipeline_checkpointed`` (each stage
-boundary is a resumable checkpoint table; local runs use parquet — see
-``sources/checkpoint.py``).
+Both runners extract with one fused Python pass,
+``extract_page_results`` (html -> text -> chunks -> triples in one
+``mapInPandas``, one row per page: ``url, n_chunks, triples``), flattened
+to triple rows with one ``inline`` projection (``page_triples``).
+
+- ``run_pipeline`` plans that pass once per graph table; its
+  ``extracted``/``chunks``/``mentions`` are lazy staged DataFrames that run
+  only if acted on. The staged chain (``extract_text`` -> ``chunk_pages``
+  -> ``extract_triples``) builds the triples only where chunk rows are
+  needed: ``overlap > 0`` (the neighbor-context window) and ``impl="sql"``.
+- ``run_pipeline_checkpointed`` checkpoints the per-page results as its one
+  resumable stage table, keyed by processed url, and writes lineage rows
+  for the ``extracted``, ``chunks`` and ``triples`` stages from it (local
+  runs use parquet — see ``sources/checkpoint.py``).
 """
 
 from __future__ import annotations
@@ -34,9 +39,10 @@ from text_to_graph_spark.operators.canonicalize import (
 from text_to_graph_spark.operators.chunking import chunk_pages
 from text_to_graph_spark.operators.extraction import (
     extract_mentions,
+    extract_page_results,
     extract_text,
     extract_triples,
-    extract_triples_from_pages,
+    page_triples,
 )
 
 
@@ -49,8 +55,8 @@ class PipelineConfig:
     chunk_size: int = 1000
     overlap: int = 0
     # triple extraction: "pandas" (batched model in mapInPandas; fused with
-    # html -> text -> chunks unless overlap > 0 or checkpointed) | "sql"
-    # (vocab model as pure Catalyst over staged chunk text)
+    # html -> text -> chunks unless overlap > 0) | "sql" (vocab model as
+    # pure Catalyst over staged chunk text; run_pipeline only)
     impl: str = "pandas"
     lang_filter: str | None = None
     # content-hash pre-dedup (the reference never re-extracts identical
@@ -85,17 +91,29 @@ def run_pipeline_checkpointed(
     workdir: str,
     cfg: PipelineConfig = PipelineConfig(),
 ) -> dict[str, DataFrame]:
-    """The stage DAG with every boundary materialized through
-    ``StageCheckpoint`` — the production shape: a killed run resumes from
-    the last completed stage table (reference ``optimization_on`` semantics,
-    ``graph_generator.py:183``), reruns recompute only missing keys, and
-    every materialization appends per-partition lineage metrics.
+    """The stage DAG materialized through ``StageCheckpoint`` — the
+    production shape. One resumable stage, ``triples``, holds the fused
+    extraction's per-page results (``extract_page_results``: one row per
+    processed url, its chunk count and its triple list), so a killed run
+    resumes where it stopped and a rerun extracts only urls it has never
+    seen — urls with zero triples included (reference ``optimization_on``
+    semantics, ``graph_generator.py:183``). Canonical edges and nodes are
+    rebuilt only when that table changed. Every materialization appends
+    per-partition lineage rows; the results table reports ``extracted``,
+    ``chunks`` and ``triples`` from one job.
+
+    The neighbor-context window (``overlap > 0``) and the Catalyst
+    extractor (``impl="sql"``) need staged chunk rows; use ``run_pipeline``
+    for them.
     """
-    from text_to_graph_spark.operators.extraction import (
-        extract_mentions as _mentions,
-    )
     from text_to_graph_spark.sources.checkpoint import StageCheckpoint
 
+    if cfg.overlap > 0:
+        raise ValueError("run_pipeline_checkpointed does not support overlap > 0")
+    if cfg.impl != "pandas":
+        raise ValueError(
+            f"run_pipeline_checkpointed supports impl='pandas' only, got {cfg.impl!r}"
+        )
     ck = StageCheckpoint(spark, workdir)
     cid = cfg.config_id()
     if cfg.lang_filter:
@@ -103,35 +121,31 @@ def run_pipeline_checkpointed(
     if cfg.dedup_pages:
         pages = dedup_pages_by_content(pages)
 
-    extracted = ck.resume(
-        pages, "extracted", cid, ["url"],
-        lambda missing: extract_text(missing),
-    )
-    chunks = ck.resume(
-        extracted, "chunks", cid, ["url"],
-        lambda missing: chunk_pages(
-            missing, chunk_size=cfg.chunk_size,
-            token_counter=cfg.token_counter,
+    results = ck.resume(
+        pages, "triples", cid, ["url"],
+        lambda missing: extract_page_results(
+            missing, cfg.model, cfg.chunk_size, cfg.token_counter
         ),
+        lineage={
+            "extracted": F.lit(1),
+            "chunks": F.col("n_chunks"),
+            "triples": F.size("triples"),
+        },
     )
-    triples = ck.resume(
-        chunks, "triples", cid, ["url"],
-        lambda missing: extract_triples(missing, cfg.model, impl=cfg.impl),
+    triples = page_triples(results)
+    # canonicalization is a global aggregate: rewritten wholesale whenever
+    # the triples table changed (keyed resume does not apply to a
+    # whole-corpus groupBy), reused as is otherwise
+    edges = ck.write(
+        triples_to_canonical_edges(triples), "edges", cid, source="triples"
     )
-    # canonicalization is a global aggregate — rewritten wholesale per run
-    # (cheap relative to extraction; keyed resume does not apply to a
-    # whole-corpus groupBy)
-    edges = ck.write(triples_to_canonical_edges(triples), "edges", cid)
     cats = vocab_category_table(spark) if cfg.model == "vocab" else None
     nodes = ck.write(
-        triples_to_canonical_nodes(triples, category_of=cats), "nodes", cid
+        triples_to_canonical_nodes(triples, category_of=cats), "nodes", cid,
+        source="triples",
     )
-    mentions = _mentions(chunks.select("url", "chunk_index", "text"), cfg.model)
     return {
         "pages": pages,
-        "extracted": extracted,
-        "chunks": chunks,
-        "mentions": mentions,
         "triples": triples,
         "edges": edges,
         "nodes": nodes,
@@ -176,8 +190,8 @@ def run_pipeline(
     if cfg.overlap > 0 or cfg.impl == "sql":
         triples = extract_triples(chunk_input, cfg.model, impl=cfg.impl)
     else:
-        triples = extract_triples_from_pages(
-            pages, cfg.model, cfg.chunk_size, cfg.token_counter
+        triples = page_triples(
+            extract_page_results(pages, cfg.model, cfg.chunk_size, cfg.token_counter)
         )
     mentions = extract_mentions(chunk_input, cfg.model)
     edges = triples_to_canonical_edges(triples)
