@@ -94,6 +94,45 @@ def test_pipe_sanitized_and_empty_keys_dropped(spark):
     assert keys == {("a_b", "r_s", "c"), ("_", "join", "c")}
 
 
+def test_half_empty_triple_nodes_match_oracle(spark, pages_smoke, tmp_path, monkeypatch):
+    # "zed" occurs only in triples whose other side sanitizes to "": no
+    # edge carries it, but it is a node; "acme" has one half-empty and one
+    # full occurrence, and the half-empty one comes first
+    import pandas as pd
+
+    from tests import oracle as O
+    from text_to_graph_spark import pipeline
+    from text_to_graph_spark.operators.canonicalize import triples_to_canonical_graph
+
+    assert _url_ord("a") < _url_ord("b")  # hash order == the oracle's url order
+    rows = [
+        ("a", 0, 0, "  ", "owns", "Zed"),
+        ("a", 0, 1, "ACME", "owns", ""),
+        ("b", 0, 0, "Acme", "owns", "Beta"),
+        ("b", 0, 1, "zed", "likes", "   "),
+    ]
+    t = _triples(spark, rows)
+    exp = O.oracle_canonical_nodes(
+        pd.DataFrame(rows, columns=["url", "chunk_index", "pos", "subj", "pred", "obj"])
+    )
+    exp = {r.key: (r.label, r.n_docs) for r in exp.itertuples()}
+    assert exp == {"zed": ("Zed", 2), "acme": ("ACME", 2), "beta": ("Beta", 1)}
+
+    def got(nodes):
+        return {r["key"]: (r["label"], r["n_docs"]) for r in nodes.collect()}
+
+    edges, nodes = triples_to_canonical_graph(t)
+    assert got(nodes) == exp
+    assert got(triples_to_canonical_nodes(t)) == exp
+    assert [(e["subj_key"], e["obj_key"]) for e in edges.collect()] == [("acme", "beta")]
+    # both runners, with these triples in place of the extracted ones
+    monkeypatch.setattr(pipeline, "page_triples", lambda results: t)
+    cfg = pipeline.PipelineConfig()
+    assert got(pipeline.run_pipeline(spark, pages_smoke, cfg)["nodes"]) == exp
+    ck = pipeline.run_pipeline_checkpointed(spark, pages_smoke, str(tmp_path), cfg)
+    assert got(ck["nodes"]) == exp
+
+
 def test_subject_before_object_order(spark):
     # same key as subj(role 0) and obj(role 1) at the same (url,chunk,pos):
     # the subject occurrence wins the label

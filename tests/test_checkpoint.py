@@ -228,6 +228,32 @@ def test_checkpointed_resume_appends_only_new_pages(spark, pages_smoke, tmp_path
     assert _all_rows(full["nodes"]) == _all_rows(clean["nodes"])
 
 
+def test_checkpointed_builds_the_canonical_pre_aggregate_only_when_needed(
+    spark, pages_smoke, tmp_path, monkeypatch
+):
+    from text_to_graph_spark.operators import canonicalize
+    from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline_checkpointed
+
+    calls = []
+    build = canonicalize.edge_grain_aggregate
+
+    def counted(triples):
+        calls.append(1)
+        return build(triples)
+
+    monkeypatch.setattr(canonicalize, "edge_grain_aggregate", counted)
+    wd = str(tmp_path / "stages")
+    half = pages_smoke.where(F.crc32("url") % 2 == 0)
+    built = []
+    for pages in (half, half, pages_smoke):  # fresh, unchanged, appended
+        calls.clear()
+        run_pipeline_checkpointed(spark, pages, wd, PipelineConfig())
+        built.append(len(calls))
+    # one pre-aggregate feeds both edges and nodes; an unchanged rerun
+    # reuses both tables and plans none
+    assert built == [1, 0, 1]
+
+
 def test_checkpointed_rejects_configs_it_cannot_apply(spark, pages_smoke, tmp_path):
     from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline_checkpointed
 

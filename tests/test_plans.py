@@ -41,17 +41,38 @@ def test_staged_extraction_has_no_shuffle_between_python_stages(spark, pages_smo
     assert count_exchanges(t) <= 1
 
 
+def _sql_store(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _execution_ids(store) -> list[int]:
+    """Ids of the executions the SQL status store retains (only the last
+    ``spark.sql.ui.retainedExecutions``, so a count is no marker)."""
+    execs = store.executionsList()
+    return [execs.apply(i).executionId() for i in range(execs.size())]
+
+
 def test_run_pipeline_builds_each_graph_table_in_one_python_pass(
-    spark, pages_smoke
+    spark, pages_smoke, tmp_path
 ):
     from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline
+    from text_to_graph_spark.sinks.graph_tables import write_graph_tables
 
+    last = max(_execution_ids(_sql_store(spark)), default=-1)
     stages = run_pipeline(spark, pages_smoke, PipelineConfig())
-    # the default path extracts html -> triples in one mapInPandas, and the
-    # nodes projection reads the triples once, so neither table re-plans
-    # the Python extraction per stage or per union branch
-    assert python_eval_count(stages["edges"]) == 1
-    assert python_eval_count(stages["nodes"]) == 1
+    write_graph_tables(stages["nodes"], stages["edges"], str(tmp_path / "graph"))
+    # the whole build (both graph tables written) extracts once: nodes and
+    # edges project one materialized edge-grain pre-aggregate
+    store = _sql_store(spark)
+    evals = 0
+    for eid in _execution_ids(store):
+        if eid > last:
+            nodes = store.planGraph(eid).allNodes()
+            evals += sum(
+                nodes.apply(j).name() == "MapInPandas" for j in range(nodes.size())
+            )
+    assert evals == 1
 
 
 def test_checkpointed_build_writes_one_python_pass(

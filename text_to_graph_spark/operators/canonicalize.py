@@ -30,6 +30,11 @@ aggregations:
   are materialized only at export via ``row_number()`` (the reference's
   global counter, ``graph_utils.py:38-39``, is inherently sequential).
 
+Like the reference's one merge over a document's rows, the default
+(``doc_ids``) mode aggregates the occurrence rows once, at edge grain
+(:func:`edge_grain_aggregate`); edges and nodes are two projections of that
+distinct-edge-sized table (:func:`triples_to_canonical_graph`).
+
 Skew: a hot surface form ("the company") would overload one reducer. The
 aggregations here are all algebraic/set-union shaped, so Spark's partial
 aggregation (map-side combine) already absorbs most skew;
@@ -79,6 +84,93 @@ def first_occurrence_ord(role: str | None = None):
     return o
 
 
+_SPO = ("subj", "pred", "obj")
+_EDGE_KEYS = [f"{c}_key" for c in _SPO]
+
+
+def _has_endpoints():
+    return (F.col("subj_key") != "") & (F.col("obj_key") != "")
+
+
+def edge_grain_aggregate(triples: DataFrame) -> DataFrame:
+    """The default-mode aggregate both graph tables project: one row per
+    ``(subj_key, pred_key, obj_key)`` over ALL triples, empty-key groups
+    included, with ``_ord`` (the group's minimum
+    :func:`first_occurrence_ord`, role-free, so bit 0 is 0), ``_labels``
+    (the sanitized ``(subj, pred, obj)`` at that ordinal), ``_urls`` (the
+    url set) and ``n_occurrences``. Only the edge projection drops the
+    empty-key groups: a node whose only occurrence is in a half-empty
+    triple is still a node."""
+    occ = triples.select(
+        "url",
+        first_occurrence_ord().alias("_o"),
+        F.struct(*(sanitize_col(c).alias(c) for c in _SPO)).alias("_labels"),
+    )
+    return occ.groupBy(
+        *(F.lower(f"_labels.{c}").alias(f"{c}_key") for c in _SPO)
+    ).agg(
+        F.min("_o").alias("_ord"),
+        F.min_by("_labels", "_o").alias("_labels"),
+        F.collect_set("url").alias("_urls"),
+        F.count(F.lit(1)).alias("n_occurrences"),
+    )
+
+
+def _canonical_edges_of(pre: DataFrame) -> DataFrame:
+    """Canonical edges: the :func:`edge_grain_aggregate` groups with
+    non-empty subject and object keys."""
+    return pre.where(_has_endpoints()).select(
+        *_EDGE_KEYS,
+        *(F.col(f"_labels.{c}").alias(f"{c}_label") for c in _SPO),
+        F.array_sort("_urls").alias("doc_ids"),
+        F.size("_urls").cast("long").alias("n_docs"),
+        "n_occurrences",
+    )
+
+
+def _canonical_nodes_of(
+    pre: DataFrame, category_of: DataFrame | None = None
+) -> DataFrame:
+    """Canonical nodes, aggregated over the :func:`edge_grain_aggregate`
+    rows instead of the occurrence rows. Each group contributes its subject
+    at ``_ord + 0`` and its object at ``_ord + 1`` — exactly the minimum of
+    the role-ordered ordinal over the group's subject (object) occurrences,
+    with the label at it — so the argmin over these endpoints is the
+    node's first occurrence, and the union of their url sets its
+    ``doc_ids``."""
+    ends = pre.select("_urls", F.inline(F.array(*(
+        F.struct(
+            F.col(f"{c}_key").alias("key"),
+            F.col(f"_labels.{c}").alias("label"),
+            (F.col("_ord") + role).alias("_ord"),
+        )
+        for role, c in ((0, "subj"), (1, "obj"))
+    )))).where(F.col("key") != "")
+    nodes = ends.groupBy("key").agg(
+        F.min_by("label", "_ord").alias("label"),
+        F.array_sort(
+            F.array_distinct(F.flatten(F.collect_list("_urls")))
+        ).alias("doc_ids"),
+    ).withColumn("n_docs", F.size("doc_ids"))
+    return _attach_types(nodes, category_of)
+
+
+def triples_to_canonical_graph(
+    triples: DataFrame, category_of: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """``(edges, nodes)`` over ONE :func:`edge_grain_aggregate`, held with
+    ``localCheckpoint(eager=False)`` so writing both tables runs the
+    triples' lineage (the Python extraction, unless materialized) and the
+    occurrence aggregate once. Under AQE this call already runs the
+    aggregate's shuffle-map stage; the blocks live until the returned
+    DataFrames are garbage-collected, and the cut lineage means a lost
+    executor fails the build rather than recomputing it. (``persist()``
+    without a release would let a later build over the same input be served
+    this, possibly stale, result.)"""
+    pre = edge_grain_aggregate(triples).localCheckpoint(eager=False)
+    return _canonical_edges_of(pre), _canonical_nodes_of(pre, category_of)
+
+
 def triples_to_canonical_edges(
     triples: DataFrame, salt_buckets: int = 0, provenance: str = "doc_ids"
 ) -> DataFrame:
@@ -86,7 +178,8 @@ def triples_to_canonical_edges(
 
     Output: (subj_key, pred_key, obj_key, subj_label, pred_label, obj_label,
     doc_ids, n_docs, n_occurrences) — labels are first-occurrence originals,
-    keys are the lower(sanitize()) canonical forms.
+    keys are the lower(sanitize()) canonical forms. The default mode is a
+    projection of :func:`edge_grain_aggregate`.
 
     ``salt_buckets > 0`` routes through an explicit two-phase salted
     aggregation for pathologically hot edge keys (one predicate dominating a
@@ -111,36 +204,19 @@ def triples_to_canonical_edges(
         return _canonical_edges_counts(triples)
     if salt_buckets > 0:
         return _canonical_edges_salted(triples, salt_buckets)
-    ordv = first_occurrence_ord()
-    t = triples.select(
+    return _canonical_edges_of(edge_grain_aggregate(triples))
+
+
+def _keyed_triples(triples: DataFrame) -> DataFrame:
+    """Occurrence rows with sanitized labels and keys, empty-key triples
+    dropped: the input of the counts and salted edge aggregates."""
+    return triples.select(
         "url",
         "chunk_index",
         "pos",
-        _key("subj").alias("subj_key"),
-        _key("pred").alias("pred_key"),
-        _key("obj").alias("obj_key"),
-        sanitize_col("subj").alias("subj_s"),
-        sanitize_col("pred").alias("pred_s"),
-        sanitize_col("obj").alias("obj_s"),
-    ).where((F.col("subj_key") != "") & (F.col("obj_key") != ""))
-    return (
-        t.groupBy("subj_key", "pred_key", "obj_key")
-        .agg(
-            F.min_by("subj_s", ordv).alias("subj_label"),
-            F.min_by("pred_s", ordv).alias("pred_label"),
-            F.min_by("obj_s", ordv).alias("obj_label"),
-            F.array_sort(F.collect_set("url")).alias("doc_ids"),
-            F.count(F.lit(1)).alias("n_occurrences"),
-        )
-        # n_docs from the already-collected set: a countDistinct here would
-        # plan a second two-phase aggregation + exchange for a value the set
-        # union already carries (plan-shape test pins the single exchange)
-        .withColumn("n_docs", F.size("doc_ids").cast("long"))
-        .select(
-            "subj_key", "pred_key", "obj_key", "subj_label", "pred_label",
-            "obj_label", "doc_ids", "n_docs", "n_occurrences",
-        )
-    )
+        *(_key(c).alias(f"{c}_key") for c in _SPO),
+        *(sanitize_col(c).alias(f"{c}_s") for c in _SPO),
+    ).where(_has_endpoints())
 
 
 def _canonical_edges_counts(triples: DataFrame) -> DataFrame:
@@ -172,19 +248,9 @@ def _canonical_edges_counts(triples: DataFrame) -> DataFrame:
     buffer and force SortAggregate over every occurrence row — measured
     16.7 s vs 4.4 s on a 4.9M-row tile, flat from 4 to 16 cores.
     """
-    t = triples.select(
-        "url",
-        "chunk_index",
-        "pos",
-        _key("subj").alias("subj_key"),
-        _key("pred").alias("pred_key"),
-        _key("obj").alias("obj_key"),
-        sanitize_col("subj").alias("subj_s"),
-        sanitize_col("pred").alias("pred_s"),
-        sanitize_col("obj").alias("obj_s"),
-    ).where((F.col("subj_key") != "") & (F.col("obj_key") != ""))
-    keys = ["subj_key", "pred_key", "obj_key"]
-    lbls = ["subj_s", "pred_s", "obj_s"]
+    t = _keyed_triples(triples)
+    keys = _EDGE_KEYS
+    lbls = [f"{c}_s" for c in _SPO]
     variants = (
         t.select(*keys, *lbls, first_occurrence_ord().alias("_ord"))
         .groupBy(*keys, *lbls)
@@ -196,12 +262,7 @@ def _canonical_edges_counts(triples: DataFrame) -> DataFrame:
     labels = (
         variants.groupBy(*keys)
         .agg(win)
-        .select(
-            *keys,
-            F.col("_w.subj_s").alias("subj_label"),
-            F.col("_w.pred_s").alias("pred_label"),
-            F.col("_w.obj_s").alias("obj_label"),
-        )
+        .select(*keys, *(F.col(f"_w.{c}_s").alias(f"{c}_label") for c in _SPO))
     )
     counts = (
         t.select(*keys, "url")
@@ -225,17 +286,7 @@ def _canonical_edges_salted(triples: DataFrame, buckets: int) -> DataFrame:
     (order, label) struct is associative: phase-1 partial minima merge into
     the same global minimum phase 2 would have computed unsalted.
     """
-    t = triples.select(
-        "url",
-        "chunk_index",
-        "pos",
-        _key("subj").alias("subj_key"),
-        _key("pred").alias("pred_key"),
-        _key("obj").alias("obj_key"),
-        sanitize_col("subj").alias("subj_s"),
-        sanitize_col("pred").alias("pred_s"),
-        sanitize_col("obj").alias("obj_s"),
-    ).where((F.col("subj_key") != "") & (F.col("obj_key") != ""))
+    t = _keyed_triples(triples)
     ordv = first_occurrence_ord()
     salted = t.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(buckets)))
     partial = salted.groupBy("subj_key", "pred_key", "obj_key", "_salt").agg(
@@ -257,9 +308,7 @@ def _canonical_edges_salted(triples: DataFrame, buckets: int) -> DataFrame:
             F.sum("_n").alias("n_occurrences"),
         )
         .select(
-            "subj_key",
-            "pred_key",
-            "obj_key",
+            *_EDGE_KEYS,
             F.col("_s.v").alias("subj_label"),
             F.col("_p.v").alias("pred_label"),
             F.col("_o.v").alias("obj_label"),
@@ -283,64 +332,50 @@ def triples_to_canonical_nodes(
 
     Only triple participants become nodes (orphan-prune semantics,
     ``response_parser.py:178-207``). Output: (key, label, types, doc_ids,
-    n_docs). ``provenance="counts"`` drops the inline doc_ids array (empty
-    array placeholder, exact countDistinct n_docs) — nodes are the worst
-    hub case for inline provenance: a vocab of tens of entities over a
-    10^12-page crawl puts MILLIONS of urls in every node's array (see
-    :func:`triples_to_canonical_edges`).
+    n_docs). The default mode aggregates :func:`edge_grain_aggregate`'s
+    distinct-edge rows. ``provenance="counts"`` drops the inline
+    doc_ids array (empty array placeholder, exact countDistinct n_docs) —
+    nodes are the worst hub case for inline provenance: a vocab of tens of
+    entities over a 10^12-page crawl puts MILLIONS of urls in every node's
+    array (see :func:`triples_to_canonical_edges`).
     """
     if provenance not in ("doc_ids", "counts"):
         raise ValueError(f"provenance must be doc_ids|counts, got {provenance!r}")
+    if provenance == "doc_ids":
+        return _canonical_nodes_of(edge_grain_aggregate(triples), category_of)
     # one occurrence row per (triple, role) from ONE read of the triples; a
     # subj/obj union re-plans the triples lineage (the Python extraction,
     # when not materialized) once per branch
-    occ = triples.select(
-        "url",
-        "chunk_index",
-        "pos",
-        F.inline(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("role"), sanitize_col("subj").alias("label_s")
-                ),
-                F.struct(
-                    F.lit(1).alias("role"), sanitize_col("obj").alias("label_s")
-                ),
-            )
-        ),
-    )
+    occ = triples.select("url", "chunk_index", "pos", F.inline(F.array(*(
+        F.struct(F.lit(role).alias("role"), sanitize_col(c).alias("label_s"))
+        for role, c in ((0, "subj"), (1, "obj"))
+    ))))
     occ = occ.withColumn("key", F.lower("label_s")).where(F.col("key") != "")
     ordv = first_occurrence_ord(role="role")
-    if provenance == "counts":
-        # Same split + two-pass HashAggregate argmin as
-        # _canonical_edges_counts: a fused (argmin + countDistinct) plans a
-        # distinct-expand double-width shuffle, and a min_by(label, ord)
-        # puts a string in the agg buffer and forces SortAggregate over
-        # every occurrence row. Pass 1 reduces to distinct (key, variant)
-        # with min(decimal ordinal) — codegen HashAggregate, shuffle
-        # bounded by variants; pass 2 struct-mins the tiny variant table.
-        variants = (
-            occ.select("key", "label_s", ordv.alias("_ord"))
-            .groupBy("key", "label_s")
-            .agg(F.min("_ord").alias("_ord"))
-        )
-        labels = (
-            variants.groupBy("key")
-            .agg(F.min(F.struct(F.col("_ord"), F.col("label_s"))).alias("_w"))
-            .select("key", F.col("_w.label_s").alias("label"))
-        )
-        counts = occ.select("key", "url").groupBy("key").agg(
-            F.countDistinct("url").cast("int").alias("n_docs")
-        )
-        nodes = labels.join(counts, "key").select(
-            "key", "label", F.slice(F.array(F.lit("")), 1, 0).alias("doc_ids"),
-            "n_docs",
-        )
-        return _attach_types(nodes, category_of)
-    nodes = occ.groupBy("key").agg(
-        F.min_by("label_s", ordv).alias("label"),
-        F.array_sort(F.collect_set("url")).alias("doc_ids"),
-    ).withColumn("n_docs", F.size("doc_ids"))
+    # Same split + two-pass HashAggregate argmin as _canonical_edges_counts:
+    # a fused (argmin + countDistinct) plans a distinct-expand double-width
+    # shuffle, and a min_by(label, ord) puts a string in the agg buffer and
+    # forces SortAggregate over every occurrence row. Pass 1 reduces to
+    # distinct (key, variant) with min(decimal ordinal) — codegen
+    # HashAggregate, shuffle bounded by variants; pass 2 struct-mins the
+    # tiny variant table.
+    variants = (
+        occ.select("key", "label_s", ordv.alias("_ord"))
+        .groupBy("key", "label_s")
+        .agg(F.min("_ord").alias("_ord"))
+    )
+    labels = (
+        variants.groupBy("key")
+        .agg(F.min(F.struct(F.col("_ord"), F.col("label_s"))).alias("_w"))
+        .select("key", F.col("_w.label_s").alias("label"))
+    )
+    counts = occ.select("key", "url").groupBy("key").agg(
+        F.countDistinct("url").cast("int").alias("n_docs")
+    )
+    nodes = labels.join(counts, "key").select(
+        "key", "label", F.slice(F.array(F.lit("")), 1, 0).alias("doc_ids"),
+        "n_docs",
+    )
     return _attach_types(nodes, category_of)
 
 
@@ -353,46 +388,6 @@ def _attach_types(nodes: DataFrame, category_of: DataFrame | None) -> DataFrame:
             )
             .drop("type")
         )
-    else:
-        nodes = nodes.withColumn("types", F.array(F.lit("entity")))
-    return nodes.select("key", "label", "types", "doc_ids", "n_docs")
-
-
-def edges_to_canonical_nodes(
-    canonical_edges: DataFrame, category_of: DataFrame | None = None
-) -> DataFrame:
-    """Canonical node table from edge endpoints (post orphan-prune semantics:
-    a node exists iff some edge references it, ``response_parser.py:178-207``).
-
-    ``category_of``: optional small mapping DataFrame (key, type) —
-    broadcast-joined; mirrors the extractor's category assignment.
-    Output: (key, label, types:array<string>, doc_ids, n_docs).
-    """
-    endpoints = canonical_edges.select(
-        F.col("subj_key").alias("key"),
-        F.col("subj_label").alias("label"),
-        F.col("doc_ids"),
-    ).unionByName(
-        canonical_edges.select(
-            F.col("obj_key").alias("key"),
-            F.col("obj_label").alias("label"),
-            F.col("doc_ids"),
-        )
-    )
-    nodes = endpoints.groupBy("key").agg(
-        F.min("label").alias("label"),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_set("doc_ids")))).alias(
-            "doc_ids"
-        ),
-    )
-    nodes = nodes.withColumn("n_docs", F.size("doc_ids"))
-    if category_of is not None:
-        nodes = nodes.join(F.broadcast(category_of), "key", "left").withColumn(
-            "types",
-            F.array_sort(
-                F.array_distinct(F.array(F.coalesce(F.col("type"), F.lit("entity"))))
-            ),
-        ).drop("type")
     else:
         nodes = nodes.withColumn("types", F.array(F.lit("entity")))
     return nodes.select("key", "label", "types", "doc_ids", "n_docs")

@@ -11,34 +11,34 @@ The stage DAG (SURVEY.md §7.1):
 Both runners extract with one fused Python pass,
 ``extract_page_results`` (html -> text -> chunks -> triples in one
 ``mapInPandas``, one row per page: ``url, n_chunks, triples``), flattened
-to triple rows with one ``inline`` projection (``page_triples``).
+to triple rows with one ``inline`` projection (``page_triples``). Both
+build edges and nodes as two projections of one edge-grain pre-aggregate
+of the triples (``triples_to_canonical_graph``), materialized once per
+build, so a build runs the Python pass and the occurrence aggregate once.
 
-- ``run_pipeline`` plans that pass once per graph table; its
-  ``extracted``/``chunks``/``mentions`` are lazy staged DataFrames that run
-  only if acted on. The staged chain (``extract_text`` -> ``chunk_pages``
-  -> ``extract_triples``) builds the triples only where chunk rows are
-  needed: ``overlap > 0`` (the neighbor-context window) and ``impl="sql"``.
+- ``run_pipeline`` local-checkpoints that pre-aggregate. The staged chain
+  (``extract_text`` -> ``chunk_pages`` -> ``extract_triples``) builds the
+  triples only where chunk rows are needed: ``overlap > 0`` (the
+  neighbor-context window) and ``impl="sql"``.
 - ``run_pipeline_checkpointed`` checkpoints the per-page results as its one
   resumable stage table, keyed by processed url, and writes lineage rows
   for the ``extracted``, ``chunks`` and ``triples`` stages from it (local
-  runs use parquet — see ``sources/checkpoint.py``).
+  runs use parquet — see ``sources/checkpoint.py``). It builds the
+  pre-aggregate only when edges or nodes must be rewritten.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from text_to_graph_spark.kit.extract import ENTITY_CATEGORIES
-from text_to_graph_spark.operators.canonicalize import (
-    triples_to_canonical_edges,
-    triples_to_canonical_nodes,
-)
+from text_to_graph_spark.operators.canonicalize import triples_to_canonical_graph
 from text_to_graph_spark.operators.chunking import chunk_pages
 from text_to_graph_spark.operators.extraction import (
-    extract_mentions,
     extract_page_results,
     extract_text,
     extract_triples,
@@ -81,8 +81,18 @@ class PipelineConfig:
 
 
 def vocab_category_table(spark: SparkSession) -> DataFrame:
-    rows = [(k, v) for k, v in sorted(ENTITY_CATEGORIES.items())]
-    return spark.createDataFrame(rows, "key string, type string")
+    """The vocab model's ``(key, type)`` categories as a local relation
+    (``VALUES``): broadcasting it plans a ``LocalTableScan`` and runs no
+    job, where a ``createDataFrame(list)`` RDD scan runs one per build."""
+    rows = ", ".join(f"('{k}', '{v}')" for k, v in sorted(ENTITY_CATEGORIES.items()))
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(key, type)")
+
+
+def _canonical_graph(
+    spark: SparkSession, triples: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    cats = vocab_category_table(spark) if cfg.model == "vocab" else None
+    return triples_to_canonical_graph(triples, category_of=cats)
 
 
 def run_pipeline_checkpointed(
@@ -98,7 +108,9 @@ def run_pipeline_checkpointed(
     resumes where it stopped and a rerun extracts only urls it has never
     seen — urls with zero triples included (reference ``optimization_on``
     semantics, ``graph_generator.py:183``). Canonical edges and nodes are
-    rebuilt only when that table changed. Every materialization appends
+    rebuilt only when that table changed, from one local-checkpointed
+    edge-grain pre-aggregate that is constructed only then: an unchanged
+    rerun plans no canonical DataFrame. Every materialization appends
     per-partition lineage rows; the results table reports ``extracted``,
     ``chunks`` and ``triples`` from one job.
 
@@ -135,15 +147,11 @@ def run_pipeline_checkpointed(
     triples = page_triples(results)
     # canonicalization is a global aggregate: rewritten wholesale whenever
     # the triples table changed (keyed resume does not apply to a
-    # whole-corpus groupBy), reused as is otherwise
-    edges = ck.write(
-        triples_to_canonical_edges(triples), "edges", cid, source="triples"
-    )
-    cats = vocab_category_table(spark) if cfg.model == "vocab" else None
-    nodes = ck.write(
-        triples_to_canonical_nodes(triples, category_of=cats), "nodes", cid,
-        source="triples",
-    )
+    # whole-corpus groupBy), reused as is otherwise; both tables share one
+    # pre-aggregate, built on first use
+    graph = functools.cache(lambda: _canonical_graph(spark, triples, cfg))
+    edges = ck.write(lambda: graph()[0], "edges", cid, source="triples")
+    nodes = ck.write(lambda: graph()[1], "nodes", cid, source="triples")
     return {
         "pages": pages,
         "triples": triples,
@@ -169,40 +177,40 @@ def run_pipeline(
     pages: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
 ) -> dict[str, DataFrame]:
-    """Run pages -> graph; returns every stage for checkpointing/inspection."""
+    """Run pages -> graph; returns ``pages``, ``triples``, ``edges`` and
+    ``nodes``.
+
+    ``edges`` and ``nodes`` read one edge-grain pre-aggregate held with
+    ``localCheckpoint(eager=False)``, so writing both runs the extraction
+    once. Under AQE, creating that checkpoint already runs the
+    pre-aggregate's shuffle-map stage — the extraction — in this call (2
+    jobs); the first action over either table then computes and keeps the
+    final stage. Its blocks are freed when the returned DataFrames are
+    garbage-collected, and its lineage is cut: losing an executor fails the
+    build instead of recomputing it. ``triples`` stays lazy and re-runs the
+    extraction if acted on."""
     if cfg.lang_filter:
         pages = pages.where(F.col("lang") == cfg.lang_filter)
     if cfg.dedup_pages:
         pages = dedup_pages_by_content(pages)
-    extracted = extract_text(pages)
-    chunks = chunk_pages(
-        extracted, chunk_size=cfg.chunk_size, token_counter=cfg.token_counter
-    )
-    if cfg.overlap > 0:
-        from text_to_graph_spark.operators.chunking import with_neighbor_context
-
-        ctx = with_neighbor_context(chunks, cfg.chunk_size, cfg.overlap)
-        chunk_input = ctx.select(
-            "url", "chunk_index", F.col("context_text").alias("text")
-        )
-    else:
-        chunk_input = chunks.select("url", "chunk_index", "text")
     if cfg.overlap > 0 or cfg.impl == "sql":
-        triples = extract_triples(chunk_input, cfg.model, impl=cfg.impl)
+        chunks = chunk_pages(
+            extract_text(pages),
+            chunk_size=cfg.chunk_size,
+            token_counter=cfg.token_counter,
+        )
+        if cfg.overlap > 0:
+            from text_to_graph_spark.operators.chunking import with_neighbor_context
+
+            chunks = with_neighbor_context(
+                chunks, cfg.chunk_size, cfg.overlap
+            ).withColumn("text", F.col("context_text"))
+        triples = extract_triples(
+            chunks.select("url", "chunk_index", "text"), cfg.model, impl=cfg.impl
+        )
     else:
         triples = page_triples(
             extract_page_results(pages, cfg.model, cfg.chunk_size, cfg.token_counter)
         )
-    mentions = extract_mentions(chunk_input, cfg.model)
-    edges = triples_to_canonical_edges(triples)
-    cats = vocab_category_table(spark) if cfg.model == "vocab" else None
-    nodes = triples_to_canonical_nodes(triples, category_of=cats)
-    return {
-        "pages": pages,
-        "extracted": extracted,
-        "chunks": chunks,
-        "mentions": mentions,
-        "triples": triples,
-        "edges": edges,
-        "nodes": nodes,
-    }
+    edges, nodes = _canonical_graph(spark, triples, cfg)
+    return {"pages": pages, "triples": triples, "edges": edges, "nodes": nodes}

@@ -15,7 +15,8 @@ SQLite response cache keyed ``(document_id, chunk_index, config_id)``
   rerun, including keys that produced no triples;
 - a derived table (``write(..., source=stage)``) remembers which version of
   its source stage it was built from and is reused while that version is
-  current, so an unchanged rerun rewrites nothing;
+  current, so an unchanged rerun rewrites nothing — and, given a builder
+  instead of a DataFrame, plans nothing;
 - every materialization appends per-partition lineage rows
   ``(stage, config_id, partition_id, rows_out, wall_ms, recorded_at)`` to
   ``<workdir>/_metrics`` (the build contract's lineage requirement). One
@@ -29,6 +30,7 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,7 +65,7 @@ class StageCheckpoint:
 
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | Callable[[], DataFrame],
         stage: str,
         config_id: str,
         source: str | None = None,
@@ -73,7 +75,8 @@ class StageCheckpoint:
 
         ``source`` names the stage ``df`` is derived from: when this table
         was already built from the current version of ``source``, it is
-        returned as is."""
+        returned as is. ``df`` may be a zero-argument builder, called only
+        when the table is (re)written."""
         path = self._path(stage, config_id)
         marker = os.path.join(path, _SOURCE_MARKER)
         if source is not None:
@@ -82,6 +85,8 @@ class StageCheckpoint:
                 with open(marker) as f:
                     if f.read() == current:
                         return self.read(stage, config_id)
+        if callable(df):
+            df = df()
         out = self._commit(df, stage, config_id, "overwrite")
         if source is not None:
             with open(marker, "w") as f:
