@@ -31,6 +31,7 @@ from text_to_graph_spark.operators import similarity as SIM
 from text_to_graph_spark.operators import textstats as TS
 from text_to_graph_spark.operators.canonicalize import (
     triples_to_canonical_edges,
+    triples_to_canonical_graph,
     triples_to_canonical_nodes,
 )
 from text_to_graph_spark.functions.portable import (
@@ -190,14 +191,18 @@ def _stages(spark: SparkSession, sf_dir: str) -> dict:
         triples = extract_triples(chunks, "vocab", impl="pandas").localCheckpoint(
             eager=False
         )
-        # canonical edges feed a dozen read-path queries — checkpoint once
-        edges = triples_to_canonical_edges(triples).localCheckpoint(eager=False)
+        # canonical edges and nodes feed dozens of read-path queries: both
+        # project one local-checkpointed edge-grain pre-aggregate
+        edges, nodes = triples_to_canonical_graph(
+            triples, category_of=vocab_category_table(spark)
+        )
         _CACHE[key] = {
             "pages": pages,
             "extracted": extracted,
             "chunks": chunks,
             "triples": triples,
             "edges": edges,
+            "nodes": nodes,
         }
     return _CACHE[key]
 
@@ -564,10 +569,7 @@ def _q_kg_edges_diff(spark, sf_dir):
 
 
 def _q_kg_nodes(spark, sf_dir):
-    nodes = triples_to_canonical_nodes(
-        _stages(spark, sf_dir)["triples"], category_of=vocab_category_table(spark)
-    )
-    return nodes.select(
+    return _stages(spark, sf_dir)["nodes"].select(
         "label", F.concat_ws("|", "types").alias("node_type"), "n_docs"
     )
 
@@ -1285,10 +1287,7 @@ def _q_kg_kcore(spark, sf_dir):
 
 
 def _q_kg_node_type_counts(spark, sf_dir):
-    nodes = triples_to_canonical_nodes(
-        _stages(spark, sf_dir)["triples"], category_of=vocab_category_table(spark)
-    )
-    return G.node_type_counts(nodes)
+    return G.node_type_counts(_stages(spark, sf_dir)["nodes"])
 
 
 def _q_kg_linked_mentions(spark, sf_dir):
@@ -1356,12 +1355,8 @@ def _q_kg_pair_paths(spark, sf_dir):
 def _q_kg_filtered_subgraph(spark, sf_dir):
     # viewer G1/G5: edge-label filter + endpoint semi-join + 1500-edge cap
     st = _stages(spark, sf_dir)
-    nodes = triples_to_canonical_nodes(
-        st["triples"], category_of=vocab_category_table(spark)
-    )
-    edges = st["edges"]
     _n, e = G.filter_subgraph(
-        nodes, edges, edge_labels=["join", "scan"], edge_cap=1500
+        st["nodes"], st["edges"], edge_labels=["join", "scan"], edge_cap=1500
     )
     return e.select(
         F.col("subj_key").alias("subj"),
@@ -1591,7 +1586,7 @@ def _q_kg_nodes_dense(spark, sf_dir):
     # T5: dense 0..N-1 export ids (row_number over key order, export-only)
     from text_to_graph_spark.operators.canonicalize import with_dense_export_ids
 
-    nodes = triples_to_canonical_nodes(_stages(spark, sf_dir)["triples"])
+    nodes = _stages(spark, sf_dir)["nodes"].select("key")
     return with_dense_export_ids(nodes, order_col="key").select(
         "id", F.col("key").alias("label")
     )

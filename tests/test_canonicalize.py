@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from text_to_graph_spark.operators.canonicalize import (
     render_type_set,
-    salted_collect_set,
     sanitize_col,
     triples_to_canonical_edges,
     triples_to_canonical_nodes,
@@ -110,6 +109,7 @@ def test_half_empty_triple_nodes_match_oracle(spark, pages_smoke, tmp_path, monk
         ("a", 0, 1, "ACME", "owns", ""),
         ("b", 0, 0, "Acme", "owns", "Beta"),
         ("b", 0, 1, "zed", "likes", "   "),
+        ("b", 0, 2, "Beta", "owns", " \t "),
     ]
     t = _triples(spark, rows)
     exp = O.oracle_canonical_nodes(
@@ -163,25 +163,18 @@ def test_internal_and_dense_ids(spark):
     assert sorted(r["id"] for r in dense.collect()) == [0, 1, 2]
 
 
-def test_salted_collect_set_equals_plain(spark):
-    rows = [("k%d" % (i % 3), "v%d" % (i % 7)) for i in range(200)]
-    df = spark.createDataFrame(rows, "k string, v string")
-    plain = {
-        r["k"]: sorted(r["s"])
-        for r in df.groupBy("k").agg(F.collect_set("v").alias("s")).collect()
-    }
-    salted = {
-        r["k"]: list(r["v_set"])
-        for r in salted_collect_set(df, ["k"], "v", salt_buckets=4).collect()
-    }
-    assert plain == salted
-
-
 def test_sanitize_col(spark):
-    df = spark.createDataFrame([("  a|b  ",)], "x string").select(
+    # Python's str.strip() strips every str.isspace() character, not only
+    # spaces; the Spark expression must agree on all of them
+    from text_to_graph_spark.kit.sanitize import sanitize
+
+    ws = "".join(chr(c) for c in range(0x110000) if chr(c).isspace())
+    xs = ["  a|b  ", " \t ", "\ta|b\n", "\xa0x\u3000", "\x1cz\x1f", ws + "y" + ws]
+    df = spark.createDataFrame([(x,) for x in xs], "x string").select(
         sanitize_col(F.col("x")).alias("s")
     )
-    assert df.collect()[0]["s"] == "a_b"
+    assert [r["s"] for r in df.collect()] == [sanitize(x) for x in xs]
+    assert sanitize("  a|b  ") == "a_b" and sanitize(" \t ") == ""
 
 
 def test_merge_canonical_edges_equals_batch(spark, pages_smoke):

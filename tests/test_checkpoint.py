@@ -109,12 +109,7 @@ def test_different_config_recomputes(spark, tmp_path):
     assert calls == [3, 3]  # cfgB must not see cfgA's cache
 
 
-def test_run_pipeline_checkpointed_resume_and_salted_parity(spark, pages_smoke, tmp_path):
-    from pyspark.sql import functions as F
-
-    from text_to_graph_spark.operators.canonicalize import (
-        triples_to_canonical_edges,
-    )
+def test_run_pipeline_checkpointed_resume_and_lineage(spark, pages_smoke, tmp_path):
     from text_to_graph_spark.pipeline import (
         PipelineConfig,
         run_pipeline_checkpointed,
@@ -139,28 +134,6 @@ def test_run_pipeline_checkpointed_resume_and_salted_parity(spark, pages_smoke, 
         r["stage"] for r in first["checkpoint"].metrics().select("stage").distinct().collect()
     }
     assert {"extracted", "chunks", "triples", "edges", "nodes"} <= stages
-
-    # salted two-phase aggregation is value-identical to the unsalted path
-    t = first["triples"]
-    unsalted = triples_to_canonical_edges(t)
-    salted = triples_to_canonical_edges(t, salt_buckets=8)
-    cols = ["subj_key", "pred_key", "obj_key", "subj_label", "pred_label",
-            "obj_label", "n_docs", "n_occurrences"]
-    as_set = lambda df: {tuple(r) for r in df.select(*cols).collect()}
-    assert as_set(salted) == as_set(unsalted)
-    docs_eq = (
-        unsalted.select("subj_key", "pred_key", "obj_key", "doc_ids")
-        .join(
-            salted.select(
-                "subj_key", "pred_key", "obj_key",
-                F.col("doc_ids").alias("doc_ids_s"),
-            ),
-            ["subj_key", "pred_key", "obj_key"],
-        )
-        .where(F.col("doc_ids") != F.col("doc_ids_s"))
-        .count()
-    )
-    assert docs_eq == 0
 
 
 def _stage_files(wd, stage):
@@ -254,12 +227,40 @@ def test_checkpointed_builds_the_canonical_pre_aggregate_only_when_needed(
     assert built == [1, 0, 1]
 
 
-def test_checkpointed_rejects_configs_it_cannot_apply(spark, pages_smoke, tmp_path):
-    from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline_checkpointed
+def test_checkpointed_applies_every_config(spark, pages_smoke, tmp_path):
+    from text_to_graph_spark.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+        run_pipeline_checkpointed,
+    )
 
-    for cfg in (PipelineConfig(overlap=100), PipelineConfig(impl="sql")):
-        with pytest.raises(ValueError):
-            run_pipeline_checkpointed(spark, pages_smoke, str(tmp_path / "wd"), cfg)
+    from text_to_graph_spark.kit.htmlcodec import wrap_text_as_html
+
+    # five paragraphs per page pack into several chunks, so overlap pads them
+    texts = [r["text"] for r in pages_smoke.orderBy("url").limit(100).collect()]
+    pages = spark.createDataFrame(
+        [
+            (
+                f"https://example.test/multi/{i}",
+                wrap_text_as_html("\n\n".join(texts[i : i + 5])),
+            )
+            for i in range(0, len(texts), 5)
+        ],
+        "url string, html binary",
+    )
+    cfg = PipelineConfig(chunk_size=100, overlap=20)
+    ck = run_pipeline_checkpointed(spark, pages, str(tmp_path / "wd"), cfg)
+    results = ck["checkpoint"].read("triples", cfg.config_id())
+    assert results.where(F.col("n_chunks") > 1).count() > 0
+    clean = run_pipeline(spark, pages, cfg)
+    assert _all_rows(ck["edges"]) == _all_rows(clean["edges"])
+    assert _all_rows(ck["nodes"]) == _all_rows(clean["nodes"])
+    # the window is applied, not ignored
+    plain = run_pipeline(spark, pages, PipelineConfig(chunk_size=100))
+    assert _all_rows(ck["edges"]) != _all_rows(plain["edges"])
+    # the one extraction body has no Catalyst variant to select
+    with pytest.raises(ValueError):
+        PipelineConfig(impl="sql")
 
 
 def test_cli_rerun_prints_the_same_graph(spark, tmp_path, capsys):

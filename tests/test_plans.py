@@ -59,20 +59,23 @@ def test_run_pipeline_builds_each_graph_table_in_one_python_pass(
     from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline
     from text_to_graph_spark.sinks.graph_tables import write_graph_tables
 
-    last = max(_execution_ids(_sql_store(spark)), default=-1)
-    stages = run_pipeline(spark, pages_smoke, PipelineConfig())
-    write_graph_tables(stages["nodes"], stages["edges"], str(tmp_path / "graph"))
     # the whole build (both graph tables written) extracts once: nodes and
-    # edges project one materialized edge-grain pre-aggregate
-    store = _sql_store(spark)
-    evals = 0
-    for eid in _execution_ids(store):
-        if eid > last:
-            nodes = store.planGraph(eid).allNodes()
-            evals += sum(
-                nodes.apply(j).name() == "MapInPandas" for j in range(nodes.size())
-            )
-    assert evals == 1
+    # edges project one materialized edge-grain pre-aggregate; the
+    # neighbor-context window pads inside that same pass
+    for i, cfg in enumerate((PipelineConfig(), PipelineConfig(overlap=100))):
+        last = max(_execution_ids(_sql_store(spark)), default=-1)
+        stages = run_pipeline(spark, pages_smoke, cfg)
+        write_graph_tables(stages["nodes"], stages["edges"], str(tmp_path / f"g{i}"))
+        store = _sql_store(spark)
+        evals = 0
+        for eid in _execution_ids(store):
+            if eid > last:
+                nodes = store.planGraph(eid).allNodes()
+                evals += sum(
+                    nodes.apply(j).name() == "MapInPandas"
+                    for j in range(nodes.size())
+                )
+        assert evals == 1, cfg
 
 
 def test_checkpointed_build_writes_one_python_pass(

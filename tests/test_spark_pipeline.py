@@ -16,11 +16,14 @@ from pyspark.sql import functions as F
 
 from tests import oracle as O
 from tests.conftest import SF_SMOKE
+from text_to_graph_spark.kit.chunker import neighbor_context
 from text_to_graph_spark.operators.chunking import chunk_pages, with_neighbor_context
 from text_to_graph_spark.operators.extraction import (
     extract_mentions,
+    extract_page_results,
     extract_text,
     extract_triples,
+    page_triples,
 )
 from text_to_graph_spark.pipeline import PipelineConfig, run_pipeline
 
@@ -166,6 +169,17 @@ def test_neighbor_context_window(spark):
     assert got[0] == "a b c d e f"
     assert got[1] == "c d e f g h i j"
     assert got[2] == "g h i j k l"
+    # the fused pass's per-page twin pads the same way
+    texts = [r[2] for r in rows]
+    assert neighbor_context(texts, 4, 2) == [got[i] for i in range(3)]
+    # overlap beyond chunk_size takes whole neighbours (slice start 0 used
+    # to fail the window)
+    wide = {
+        r["chunk_index"]: r["context_text"]
+        for r in with_neighbor_context(chunks, chunk_size=4, overlap=5).collect()
+    }
+    assert wide[1] == "a b c d e f g h i j k l"
+    assert neighbor_context(texts, 4, 5) == [wide[i] for i in range(3)]
 
 
 def test_lang_filter(spark, pages_smoke):
@@ -197,9 +211,9 @@ def _rows(df):
 def test_fused_path_agrees_with_staged_path_pretoken_counter(spark, pages_smoke):
     # multi-paragraph pages with punctuation: the pretoken counter packs
     # them into other chunks than the whitespace counter does, so equality
-    # with the staged chain shows the fused path honours the counter
+    # with the staged chain shows the fused path honours the counter; and
+    # with overlap, the fused padding equals the staged lag/lead window
     from text_to_graph_spark.kit.htmlcodec import wrap_text_as_html
-    from text_to_graph_spark.operators.extraction import extract_triples_from_pages
 
     texts = [r["text"] for r in pages_smoke.orderBy("url").limit(100).collect()]
     pages = spark.createDataFrame(
@@ -214,16 +228,26 @@ def test_fused_path_agrees_with_staged_path_pretoken_counter(spark, pages_smoke)
         ],
         "url string, html binary",
     )
-    def fused(counter):
-        return _rows(
-            extract_triples_from_pages(pages, "vocab", 100, token_counter=counter)
-        )
+    def fused(counter, overlap=0):
+        return _rows(page_triples(
+            extract_page_results(pages, "vocab", 100, counter, overlap=overlap)
+        ))
 
-    staged = extract_triples(
-        chunk_pages(extract_text(pages), 100, token_counter="pretoken"), "vocab"
-    )
-    assert fused("pretoken") == _rows(staged)
-    assert fused("pretoken") != fused("whitespace")
+    plain = fused("pretoken")
+    chunks = chunk_pages(extract_text(pages), 100, token_counter="pretoken")
+    # overlap 0, a 2-in-100 window, and the whole neighbour (overlap ==
+    # chunk_size) — the multi-paragraph pages pack into several chunks
+    for overlap in (0, 2, 100):
+        staged = extract_triples(
+            with_neighbor_context(chunks, 100, overlap).select(
+                "url", "chunk_index", F.col("context_text").alias("text")
+            ),
+            "vocab",
+        )
+        got = fused("pretoken", overlap)
+        assert got == _rows(staged), overlap
+        assert (got == plain) == (overlap == 0)
+    assert plain != fused("whitespace")
 
 
 def test_pipeline_fused_impl_and_dedup(spark, pages_smoke):

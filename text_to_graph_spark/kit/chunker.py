@@ -2,8 +2,8 @@
 
 Reproduces the reference's packing semantics exactly
 (``graph_extractor/src/chunk_utils.py:13-135``), as a pure function so the
-same body runs inside ``groupBy(url).applyInPandas`` on Spark and inside the
-pandas oracle:
+same body runs inside the ``mapInPandas`` extraction passes on Spark and
+inside the pandas oracle:
 
 - target ``chunk_size`` tokens; hard max ``int(1.1 * target)``; min
   ``int(0.5 * target)`` (``chunk_utils.py:68-69``)
@@ -17,7 +17,12 @@ pandas oracle:
   recounted (``chunk_utils.py:117-125``)
 
 Packing is inherently sequential *within* a document; documents are the unit
-of parallelism (one group per url under ``applyInPandas``).
+of parallelism (one pages row per url, so a row-wise ``mapInPandas``).
+
+:func:`neighbor_context` pads one document's chunk texts with their
+neighbours' text (the reference's L0 overlap, ``graph_generator.py:250-275``)
+in the same Python pass, with the semantics of the Spark window
+``operators.chunking.with_neighbor_context``.
 """
 
 from __future__ import annotations
@@ -99,3 +104,21 @@ def pack_units(
             chunks.pop()
 
     return chunks
+
+
+def neighbor_context(texts: list[str], chunk_size: int, overlap: int) -> list[str]:
+    """Each chunk text padded with ``floor(len(tokens) * overlap /
+    chunk_size)`` space-split tokens (at most all of them) from the previous
+    chunk's tail and the next chunk's head, joined with ``" "``; a side with
+    no neighbour or no tokens to take is skipped. ``texts`` is one
+    document's chunks in ``chunk_index`` order."""
+    toks = [t.split(" ") for t in texts]
+    out = []
+    for i, text in enumerate(texts):
+        parts = [text]
+        if i > 0 and (n := len(toks[i - 1]) * overlap // chunk_size) > 0:
+            parts.insert(0, " ".join(toks[i - 1][-n:]))
+        if i + 1 < len(texts) and (n := len(toks[i + 1]) * overlap // chunk_size) > 0:
+            parts.append(" ".join(toks[i + 1][:n]))
+        out.append(" ".join(parts))
+    return out

@@ -36,10 +36,11 @@ Like the reference's one merge over a document's rows, the default
 distinct-edge-sized table (:func:`triples_to_canonical_graph`).
 
 Skew: a hot surface form ("the company") would overload one reducer. The
-aggregations here are all algebraic/set-union shaped, so Spark's partial
-aggregation (map-side combine) already absorbs most skew;
-``salted_collect_set`` demonstrates the explicit two-phase salted pattern for
-the pathological case and is used when ``salt_buckets > 0``.
+aggregations here are all algebraic/set-union shaped (``min``, ``min_by``,
+``collect_set``), so Spark's partial aggregation (map-side combine) already
+absorbs it. Hot JOIN keys are what partial aggregation cannot absorb:
+:func:`join_skew_profile` finds them and :func:`skew_salted_join` spreads
+them.
 """
 
 from __future__ import annotations
@@ -48,11 +49,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # sanitize() as a built-in expression — mirrors kit/sanitize.py
-# (graph_utils.py:9-10): replace '|' with '_', trim whitespace.
+# (graph_utils.py:9-10): replace '|' with '_', strip whitespace. Spark's
+# one-argument trim strips spaces only; _WS is every character for which
+# Python's str.isspace() holds, so the trim equals str.strip().
+_WS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
 
 
 def sanitize_col(c):
-    return F.trim(F.regexp_replace(c, r"\|", "_"))
+    return F.trim(F.regexp_replace(c, r"\|", "_"), F.lit(_WS))
 
 
 def _key(c):
@@ -172,7 +179,7 @@ def triples_to_canonical_graph(
 
 
 def triples_to_canonical_edges(
-    triples: DataFrame, salt_buckets: int = 0, provenance: str = "doc_ids"
+    triples: DataFrame, provenance: str = "doc_ids"
 ) -> DataFrame:
     """(url, chunk_index, pos, subj, pred, obj) -> canonical directed edges.
 
@@ -180,12 +187,6 @@ def triples_to_canonical_edges(
     doc_ids, n_docs, n_occurrences) — labels are first-occurrence originals,
     keys are the lower(sanitize()) canonical forms. The default mode is a
     projection of :func:`edge_grain_aggregate`.
-
-    ``salt_buckets > 0`` routes through an explicit two-phase salted
-    aggregation for pathologically hot edge keys (one predicate dominating a
-    reducer even after map-side combine): phase 1 groups by (key, salt)
-    where salt derives from the url hash — deterministic under retries —
-    phase 2 merges the partials. Results are identical either way (tested).
 
     ``provenance="counts"`` drops the inline ``doc_ids`` array and computes
     ``n_docs`` as an exact ``countDistinct(url)`` instead — the web-scale
@@ -202,21 +203,7 @@ def triples_to_canonical_edges(
         raise ValueError(f"provenance must be doc_ids|counts, got {provenance!r}")
     if provenance == "counts":
         return _canonical_edges_counts(triples)
-    if salt_buckets > 0:
-        return _canonical_edges_salted(triples, salt_buckets)
     return _canonical_edges_of(edge_grain_aggregate(triples))
-
-
-def _keyed_triples(triples: DataFrame) -> DataFrame:
-    """Occurrence rows with sanitized labels and keys, empty-key triples
-    dropped: the input of the counts and salted edge aggregates."""
-    return triples.select(
-        "url",
-        "chunk_index",
-        "pos",
-        *(_key(c).alias(f"{c}_key") for c in _SPO),
-        *(sanitize_col(c).alias(f"{c}_s") for c in _SPO),
-    ).where(_has_endpoints())
 
 
 def _canonical_edges_counts(triples: DataFrame) -> DataFrame:
@@ -248,7 +235,13 @@ def _canonical_edges_counts(triples: DataFrame) -> DataFrame:
     buffer and force SortAggregate over every occurrence row — measured
     16.7 s vs 4.4 s on a 4.9M-row tile, flat from 4 to 16 cores.
     """
-    t = _keyed_triples(triples)
+    t = triples.select(
+        "url",
+        "chunk_index",
+        "pos",
+        *(_key(c).alias(f"{c}_key") for c in _SPO),
+        *(sanitize_col(c).alias(f"{c}_s") for c in _SPO),
+    ).where(_has_endpoints())
     keys = _EDGE_KEYS
     lbls = [f"{c}_s" for c in _SPO]
     variants = (
@@ -276,46 +269,6 @@ def _canonical_edges_counts(triples: DataFrame) -> DataFrame:
         "subj_key", "pred_key", "obj_key", "subj_label", "pred_label",
         "obj_label", F.slice(F.array(F.lit("")), 1, 0).alias("doc_ids"),
         "n_docs", "n_occurrences",
-    )
-
-
-def _canonical_edges_salted(triples: DataFrame, buckets: int) -> DataFrame:
-    """Two-phase salted twin of the canonical-edge aggregation.
-
-    first-occurrence-wins survives the split because ``min`` of the
-    (order, label) struct is associative: phase-1 partial minima merge into
-    the same global minimum phase 2 would have computed unsalted.
-    """
-    t = _keyed_triples(triples)
-    ordv = first_occurrence_ord()
-    salted = t.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(buckets)))
-    partial = salted.groupBy("subj_key", "pred_key", "obj_key", "_salt").agg(
-        F.min(F.struct(ordv.alias("o"), F.col("subj_s").alias("v"))).alias("_s"),
-        F.min(F.struct(ordv.alias("o"), F.col("pred_s").alias("v"))).alias("_p"),
-        F.min(F.struct(ordv.alias("o"), F.col("obj_s").alias("v"))).alias("_o"),
-        F.collect_set("url").alias("_urls"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    return (
-        partial.groupBy("subj_key", "pred_key", "obj_key")
-        .agg(
-            F.min("_s").alias("_s"),
-            F.min("_p").alias("_p"),
-            F.min("_o").alias("_o"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("_urls")))
-            ).alias("doc_ids"),
-            F.sum("_n").alias("n_occurrences"),
-        )
-        .select(
-            *_EDGE_KEYS,
-            F.col("_s.v").alias("subj_label"),
-            F.col("_p.v").alias("pred_label"),
-            F.col("_o.v").alias("obj_label"),
-            "doc_ids",
-            F.size("doc_ids").cast("long").alias("n_docs"),
-            "n_occurrences",
-        )
     )
 
 
@@ -477,29 +430,6 @@ def skew_salted_join(
         .withColumn("_salt", F.col("_salt").cast("int"))
     )
     return p.join(d, [on, "_salt"], how).drop("_salt")
-
-
-def salted_collect_set(
-    df: DataFrame, key_cols: list[str], value_col: str, salt_buckets: int = 16
-) -> DataFrame:
-    """Two-phase salted set-union aggregation for pathologically hot keys.
-
-    Phase 1 groups by (key, salt) where salt = pmod(xxhash64(value), B) —
-    derived from the *value*, not rand(), so retries are deterministic.
-    Phase 2 merges the B partial sets per key. Use when one key dominates a
-    partition even after map-side partial aggregation.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(value_col)), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy(*key_cols, "_salt").agg(
-        F.collect_set(value_col).alias("_partial")
-    )
-    return partial.groupBy(*key_cols).agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("_partial")))).alias(
-            f"{value_col}_set"
-        )
-    )
 
 
 def _min_url_hash(doc_ids_col):

@@ -16,7 +16,10 @@ single task and no truncation is recorded.
 window over ``(url, chunk_index)`` — prepend the trailing
 ``overlap/chunk_size`` fraction of the previous chunk's text and append the
 leading fraction of the next (fraction slicing by whitespace tokens, matching
-``text.split()[-n:]`` semantics via JVM built-ins ``slice``/``split``).
+``text.split()[-n:]`` semantics via JVM built-ins ``slice``/``split``). The
+pipeline runners pad inside their one fused pass instead
+(``kit.chunker.neighbor_context``, same semantics, tested against this);
+the window serves staged chunk rows.
 """
 
 from __future__ import annotations
@@ -52,7 +55,7 @@ def resolve_token_counter(
 ) -> Callable[[str], int]:
     """The C5 token counter named by ``token_counter`` — the one resolver
     behind both packing paths (:func:`chunk_pages` and the fused
-    ``extraction.extract_triples_from_pages``)."""
+    ``extraction.extract_page_results``)."""
     if token_counter == "whitespace":
         return count_tokens
     if token_counter == "pretoken":
@@ -110,14 +113,16 @@ def with_neighbor_context(
     """Add ``context_text``: prev-tail + chunk + next-head (reference L0
     overlap, ``graph_generator.py:250-275``).
 
-    frac = overlap / chunk_size of the neighbor's *whitespace tokens*. Pure
-    built-ins: split + slice + concat_ws, window lag/lead — no UDF.
+    frac = overlap / chunk_size of the neighbor's *whitespace tokens*, at
+    most all of them. Pure built-ins: split + slice + concat_ws, window
+    lag/lead — no UDF.
     """
     w = Window.partitionBy("url").orderBy("chunk_index")
     prev_toks = F.split(F.lag("text").over(w), " ")
     next_toks = F.split(F.lead("text").over(w), " ")
-    n_prev = F.floor(F.size(prev_toks) * F.lit(overlap) / F.lit(chunk_size)).cast(
-        "int"
+    n_prev = F.least(
+        F.floor(F.size(prev_toks) * F.lit(overlap) / F.lit(chunk_size)).cast("int"),
+        F.size(prev_toks),
     )
     n_next = F.floor(F.size(next_toks) * F.lit(overlap) / F.lit(chunk_size)).cast(
         "int"
@@ -128,11 +133,7 @@ def with_neighbor_context(
     )
     next_head = F.when(n_next > 0, F.concat_ws(" ", F.slice(next_toks, F.lit(1), n_next)))
     return chunks.withColumn(
-        "context_text",
-        F.concat_ws(
-            " ",
-            *[c for c in (prev_tail, F.col("text"), next_head)],
-        ),
+        "context_text", F.concat_ws(" ", prev_tail, F.col("text"), next_head)
     )
 
 

@@ -1,11 +1,18 @@
 """Text -> text / chunk -> mentions / chunk -> triples stages.
 
-Stage 1 — ``extract_text``: html:binary -> text via a vectorized pandas UDF
-(``mapInPandas`` batch transform). Byte-identical per url to the synthesized
-``text`` (the per-row invariant). Analog of the reference's extractor stage
-(``graph_extractor/src/pdf_extractor.py:6-27``), which the reference caches
-by content hash (``graph_generator.py:341-358``); our resume primitive is an
-anti-join against the stage checkpoint (see ``sources/checkpoint.py``).
+``extract_page_results`` is the pipeline's one extraction body (html ->
+text -> chunks -> optional neighbor-context padding -> triples in ONE
+``mapInPandas``, one row per page); both runners in ``pipeline.py`` call it
+for every config. The staged operators below run the same steps one
+``mapInPandas`` each; they stay public, oracle-checked functions for the
+registry, ``bench.py`` and the benchmark's per-layer trace.
+
+Stage 1 — ``extract_text``: html:binary -> text, byte-identical per url to
+the synthesized ``text`` (the per-row invariant). Analog of the reference's
+extractor stage (``graph_extractor/src/pdf_extractor.py:6-27``), which the
+reference caches by content hash (``graph_generator.py:341-358``); our
+resume primitive is an anti-join against the stage checkpoint (see
+``sources/checkpoint.py``).
 
 Stage 3/4 — ``extract_mentions`` / ``extract_triples``: the deterministic
 batched model (see ``kit/extract.py``) inside ``mapInPandas``. One model
@@ -14,11 +21,11 @@ group-shift), not per-row Python. Mirrors the reference's L1 mention pass
 (``graph_generator.py:215-243``) and L0/L2 triple pass
 (``graph_generator.py:160-212,247-288``) with the LLM replaced per contract.
 
-A pure-Catalyst implementation (``impl="sql"``) of the vocab model is also
-provided: the trigram scan as ``transform(sequence(...))`` over the token
-array — whole-stage-codegen'd JVM execution, no Python at all. It is the
-fastest path when the model is expressible relationally; the benchmark runs
-both so the tradeoff is measured, and tests assert they agree.
+``extract_triples(..., impl="sql")`` is a pure-Catalyst twin of the vocab
+model (the trigram scan as ``transform(sequence(...))`` over the token
+array, whole-stage codegen, no Python). It needs staged chunk rows, so no
+pipeline runner uses it; the registry and ``bench.py`` do, and tests
+assert it agrees with the model.
 """
 
 from __future__ import annotations
@@ -31,7 +38,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from text_to_graph_spark.kit.chunker import pack_units
+from text_to_graph_spark.kit.chunker import neighbor_context, pack_units
 from text_to_graph_spark.kit.extract import get_model
 from text_to_graph_spark.kit.htmlcodec import extract_text_from_html
 from text_to_graph_spark.operators.chunking import resolve_token_counter
@@ -147,17 +154,24 @@ def extract_page_results(
     model_name: str = "vocab",
     chunk_size: int = 1000,
     token_counter: str = "whitespace",
+    overlap: int = 0,
 ) -> DataFrame:
     """Fused html -> text -> chunks -> triples in ONE ``mapInPandas``, one
     output row per input page: ``(url, n_chunks, triples)``.
+
+    ``overlap > 0`` pads each page's chunk texts with their neighbours'
+    text before the model runs (``kit.chunker.neighbor_context``, the
+    reference's L0 overlap window); at ``overlap == 0`` no context is built.
 
     A page with no triples (or null/undecodable html, which has no chunks)
     is still a row with an empty ``triples`` list, so the set of urls in the
     output is the set of urls processed — the key set a resumable stage
     table needs. ``page_triples`` flattens it to the staged chain's triple
     rows: ``page_triples(extract_page_results(pages))`` equals
-    ``extract_triples(chunk_pages(extract_text(pages)))`` (tests assert it),
-    but crosses the JVM<->Python Arrow boundary once instead of three times.
+    ``extract_triples(chunk_pages(extract_text(pages)))``, and with
+    ``overlap`` the same chain over ``with_neighbor_context``'s
+    ``context_text`` (tests assert both), but crosses the JVM<->Python
+    Arrow boundary once instead of three times.
     Each batch's ``triples`` column is one Arrow ``ListArray``: the batch's
     triple columns cut by per-page offsets.
     """
@@ -173,11 +187,13 @@ def extract_page_results(
             ctexts: list = []
             for i, html in enumerate(pdf["html"]):
                 rows = pack_units(extract_text_from_html(html), chunk_size, counter)
-                n_chunks[i] = len(rows)
-                for row in rows:
-                    owner.append(i)
-                    cidx.append(row["chunk_index"])
-                    ctexts.append(row["text"])
+                texts = [row["text"] for row in rows]
+                if overlap > 0:
+                    texts = neighbor_context(texts, chunk_size, overlap)
+                n_chunks[i] = len(texts)
+                owner.extend([i] * len(texts))
+                cidx.extend(range(len(texts)))
+                ctexts.extend(texts)
             t = model.triples(pd.Series(ctexts, dtype=object))
             chunk = t["row"].to_numpy(dtype=np.int64)
             pos = t["pos"].to_numpy(dtype=np.int32)
@@ -226,8 +242,7 @@ def extract_triples_from_pages(
     token_counter: str = "whitespace",
 ) -> DataFrame:
     """Fused html -> text -> chunks -> triple rows: ``page_triples`` over
-    ``extract_page_results`` (one ``mapInPandas``). Use the staged operators
-    when the chunk rows feed a window (neighbor-context overlap)."""
+    ``extract_page_results`` (one ``mapInPandas``)."""
     return page_triples(
         extract_page_results(pages, model_name, chunk_size, token_counter)
     )

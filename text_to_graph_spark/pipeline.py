@@ -8,18 +8,16 @@ The stage DAG (SURVEY.md §7.1):
       -> triples (url, chunk_index, pos, subj, pred, obj)   batched model
       -> canonical edges + nodes          groupBy/min_by/collect_set
 
-Both runners extract with one fused Python pass,
-``extract_page_results`` (html -> text -> chunks -> triples in one
-``mapInPandas``, one row per page: ``url, n_chunks, triples``), flattened
-to triple rows with one ``inline`` projection (``page_triples``). Both
-build edges and nodes as two projections of one edge-grain pre-aggregate
-of the triples (``triples_to_canonical_graph``), materialized once per
-build, so a build runs the Python pass and the occurrence aggregate once.
+Both runners extract every config with one fused Python pass,
+``extract_page_results`` (html -> text -> chunks -> neighbor-context
+padding when ``overlap > 0`` -> triples in one ``mapInPandas``, one row per
+page: ``url, n_chunks, triples``), flattened to triple rows with one
+``inline`` projection (``page_triples``). Both build edges and nodes as two
+projections of one edge-grain pre-aggregate of the triples
+(``triples_to_canonical_graph``), materialized once per build, so a build
+runs the Python pass and the occurrence aggregate once.
 
-- ``run_pipeline`` local-checkpoints that pre-aggregate. The staged chain
-  (``extract_text`` -> ``chunk_pages`` -> ``extract_triples``) builds the
-  triples only where chunk rows are needed: ``overlap > 0`` (the
-  neighbor-context window) and ``impl="sql"``.
+- ``run_pipeline`` local-checkpoints that pre-aggregate.
 - ``run_pipeline_checkpointed`` checkpoints the per-page results as its one
   resumable stage table, keyed by processed url, and writes lineage rows
   for the ``extracted``, ``chunks`` and ``triples`` stages from it (local
@@ -37,8 +35,9 @@ from pyspark.sql import functions as F
 
 from text_to_graph_spark.kit.extract import ENTITY_CATEGORIES
 from text_to_graph_spark.operators.canonicalize import triples_to_canonical_graph
-from text_to_graph_spark.operators.chunking import chunk_pages
-from text_to_graph_spark.operators.extraction import (
+# unused here; perfbench/trace.py wraps chunk_pages/extract_text/extract_triples by name
+from text_to_graph_spark.operators.chunking import chunk_pages  # noqa: F401
+from text_to_graph_spark.operators.extraction import (  # noqa: F401
     extract_page_results,
     extract_text,
     extract_triples,
@@ -54,9 +53,9 @@ class PipelineConfig:
     model: str = "vocab"
     chunk_size: int = 1000
     overlap: int = 0
-    # triple extraction: "pandas" (batched model in mapInPandas; fused with
-    # html -> text -> chunks unless overlap > 0) | "sql" (vocab model as
-    # pure Catalyst over staged chunk text; run_pipeline only)
+    # triple extraction: "pandas" (the batched model inside the one fused
+    # mapInPandas) is the only accepted value; the field stays so that
+    # config ids are unchanged
     impl: str = "pandas"
     lang_filter: str | None = None
     # content-hash pre-dedup (the reference never re-extracts identical
@@ -69,8 +68,8 @@ class PipelineConfig:
     token_counter: str = "whitespace"
 
     def __post_init__(self) -> None:
-        if self.impl not in ("pandas", "sql"):
-            raise ValueError(f"impl must be pandas|sql, got {self.impl!r}")
+        if self.impl != "pandas":
+            raise ValueError(f"impl must be pandas, got {self.impl!r}")
 
     def config_id(self) -> str:
         import hashlib
@@ -86,6 +85,12 @@ def vocab_category_table(spark: SparkSession) -> DataFrame:
     job, where a ``createDataFrame(list)`` RDD scan runs one per build."""
     rows = ", ".join(f"('{k}', '{v}')" for k, v in sorted(ENTITY_CATEGORIES.items()))
     return spark.sql(f"SELECT * FROM VALUES {rows} AS t(key, type)")
+
+
+def _page_results(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    return extract_page_results(
+        pages, cfg.model, cfg.chunk_size, cfg.token_counter, cfg.overlap
+    )
 
 
 def _canonical_graph(
@@ -113,19 +118,9 @@ def run_pipeline_checkpointed(
     rerun plans no canonical DataFrame. Every materialization appends
     per-partition lineage rows; the results table reports ``extracted``,
     ``chunks`` and ``triples`` from one job.
-
-    The neighbor-context window (``overlap > 0``) and the Catalyst
-    extractor (``impl="sql"``) need staged chunk rows; use ``run_pipeline``
-    for them.
     """
     from text_to_graph_spark.sources.checkpoint import StageCheckpoint
 
-    if cfg.overlap > 0:
-        raise ValueError("run_pipeline_checkpointed does not support overlap > 0")
-    if cfg.impl != "pandas":
-        raise ValueError(
-            f"run_pipeline_checkpointed supports impl='pandas' only, got {cfg.impl!r}"
-        )
     ck = StageCheckpoint(spark, workdir)
     cid = cfg.config_id()
     if cfg.lang_filter:
@@ -135,9 +130,7 @@ def run_pipeline_checkpointed(
 
     results = ck.resume(
         pages, "triples", cid, ["url"],
-        lambda missing: extract_page_results(
-            missing, cfg.model, cfg.chunk_size, cfg.token_counter
-        ),
+        lambda missing: _page_results(missing, cfg),
         lineage={
             "extracted": F.lit(1),
             "chunks": F.col("n_chunks"),
@@ -193,24 +186,6 @@ def run_pipeline(
         pages = pages.where(F.col("lang") == cfg.lang_filter)
     if cfg.dedup_pages:
         pages = dedup_pages_by_content(pages)
-    if cfg.overlap > 0 or cfg.impl == "sql":
-        chunks = chunk_pages(
-            extract_text(pages),
-            chunk_size=cfg.chunk_size,
-            token_counter=cfg.token_counter,
-        )
-        if cfg.overlap > 0:
-            from text_to_graph_spark.operators.chunking import with_neighbor_context
-
-            chunks = with_neighbor_context(
-                chunks, cfg.chunk_size, cfg.overlap
-            ).withColumn("text", F.col("context_text"))
-        triples = extract_triples(
-            chunks.select("url", "chunk_index", "text"), cfg.model, impl=cfg.impl
-        )
-    else:
-        triples = page_triples(
-            extract_page_results(pages, cfg.model, cfg.chunk_size, cfg.token_counter)
-        )
+    triples = page_triples(_page_results(pages, cfg))
     edges, nodes = _canonical_graph(spark, triples, cfg)
     return {"pages": pages, "triples": triples, "edges": edges, "nodes": nodes}

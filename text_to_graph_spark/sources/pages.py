@@ -130,14 +130,13 @@ def synthesize_skewed_triples(
     hot_pct: int = 30,
     n_keys: int = 50_000,
 ) -> DataFrame:
-    """Deterministic Zipf-head skew fixture for the salted-aggregation
-    drill: ``hot_pct`` percent of all occurrence rows carry ONE edge key
-    (the boilerplate-predicate shape — think "page | has_footer | © 2025"
-    across a third of the crawl), the rest spread uniformly over
-    ``n_keys`` keys. Every row gets its own url, so the hot key's
-    collect_set(url) state is maximal — the worst case for the unsalted
-    single-reducer final merge and exactly what ``salt_buckets`` exists
-    for. Pure ``spark.range`` arithmetic: no rand(), bit-identical across
+    """Deterministic Zipf-head skew fixture for the salted-join drill
+    (``canonicalize.skew_salted_join``): ``hot_pct`` percent of all
+    occurrence rows carry ONE edge key (the boilerplate-predicate shape —
+    think "page | has_footer | © 2025" across a third of the crawl), the
+    rest spread uniformly over ``n_keys`` keys. Every row gets its own url,
+    so an unsalted shuffle join sends the hot key's rows to one reducer.
+    Pure ``spark.range`` arithmetic: no rand(), bit-identical across
     runs and partitionings. Returns the triples input-contract shape
     (url, chunk_index, pos, subj, pred, obj).
     """
